@@ -3,10 +3,23 @@
 Reimplements the semantics of ``/root/reference/city2graph/proximity.py``
 (knn_graph 771-887, fixed_radius_graph 1303-1437, gabriel_graph 985-1081,
 relative_neighborhood_graph 1084-1184, waxman_graph 1440-1567) over
-``(node_id, x, y)`` DataFrames.  Every operator here is pure DataFrame
-column arithmetic — cell equi-joins + window ranks + anti-joins — so the
-whole plan stays inside whole-stage codegen; there is **no Python UDF in
-any hot path**.
+``(node_id, x, y)`` DataFrames.  Candidate generation is JVM column
+arithmetic (cell equi-joins, window ranks, anti-joins); the CPU-bound
+per-block work runs in numpy kernels behind grouped pandas UDFs:
+
+- ``knn_graph`` phase 1: ``applyInPandas`` per (superblock, salt), local
+  top-k with an exactness certificate per probe;
+- ``gabriel_graph`` / ``relative_neighborhood_graph`` with ``r_cand``:
+  ``applyInPandas`` per superblock, the empty-region witness test;
+- ``delaunay_graph``: Bowyer–Watson on the driver, or per tile in
+  ``applyInPandas`` past ``driver_switch`` points.
+
+Partitioning rule for the knn and gabriel/rng kernels: the exploded input
+is hash-partitioned on the group keys into ``spark.sql.shuffle.partitions``
+tasks (``_kernel_exchange``).  The input is small in bytes but costs much
+kernel CPU per byte, so AQE's byte-based coalescing would fold it onto one
+core.  ``fixed_radius_graph``, ``waxman_graph`` and the unbounded
+(``r_cand=None``) witness filter stay entirely in the JVM.
 
 Scale notes (10^12 rows):
 
@@ -42,6 +55,16 @@ def _persist(df: DataFrame) -> DataFrame:
     cluster this is where an Iceberg snapshot checkpoint would land (north
     rule resumability); in-process, MEMORY_AND_DISK gives the same reuse."""
     return df.persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def _kernel_exchange(df: DataFrame, *keys: str) -> DataFrame:
+    """Hash-partition a kernel stage's input on its group keys into
+    ``spark.sql.shuffle.partitions`` tasks.  The grouped kernel reuses this
+    exchange, and AQE never coalesces a repartition with an explicit count:
+    left to AQE, a ~1 MB kernel input (5k points) ran 0.9 CPU-s of kernel
+    in one task on one core."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *keys)
 
 
 def _dist(metric: str, dx, dy):
@@ -272,7 +295,8 @@ def knn_graph(points: DataFrame, k: int, *, cell_size: float,
                          & (F.col("_salt") == F.col("_psalt")))
              .select("node_id", "x", "y", "cell", "qcell", "_salt", "_probe"))
     top1 = _persist(
-        cands.groupBy("qcell", "_salt")
+        _kernel_exchange(cands, "qcell", "_salt")
+        .groupBy("qcell", "_salt")
         .applyInPandas(_local_topk_kernel(k, metric, B),
                        "src long, dst long, weight double, cert boolean, "
                        "px double, py double"))
@@ -653,7 +677,7 @@ def _empty_region_graph(points: DataFrame, r_cand: float,
     # farther than r_cand from the home cell's box — was measured ~0.3 s
     # SLOWER end-to-end at the bench shape despite shipping 2.25× fewer
     # rows; the interleaved A/B is recorded in OPTIMIZATION_r07.md.)
-    return (cands.groupBy("qcell")
+    return (_kernel_exchange(cands, "qcell").groupBy("qcell")
             .applyInPandas(_empty_graph_kernel(float(r_cand), B, mode),
                            "u long, v long, weight double"))
 

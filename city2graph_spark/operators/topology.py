@@ -231,10 +231,11 @@ def minimum_spanning_forest(edges: DataFrame, *, src: str = "u",
 
     Returns the forest edges (u, v, weight) — the MST when connected.
     """
+    # of parallel edges only the lightest can be in a minimum forest
     e0 = edges.select(F.least(src, dst).alias("u"),
                       F.greatest(src, dst).alias("v"),
                       F.col(weight).alias("weight")) \
-        .dropDuplicates(["u", "v"]).persist()
+        .groupBy("u", "v").agg(F.min("weight").alias("weight")).persist()
     e = e0
     nodes = e.select(F.col("u").alias("node")) \
         .unionByName(e.select(F.col("v").alias("node"))).dropDuplicates()

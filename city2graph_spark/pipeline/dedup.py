@@ -132,7 +132,9 @@ def minhash_signatures(docs: DataFrame, *, n_hashes: int = 8,
                 "sig": [row.astype(np.int64).tolist() for row in sig]})
             yield out
 
-    return docs.select(id_col, text_col) \
+    # NULL text has no shingles, so no signature (the SQL twin's shingle
+    # hash is NULL and never joins); astype(str) would hash it as "None"
+    return docs.select(id_col, text_col).where(F.col(text_col).isNotNull()) \
         .mapInPandas(batches, f"{id_col} long, sig array<long>")
 
 
@@ -193,7 +195,9 @@ def minhash_signatures_md5(docs: DataFrame, *, n_hashes: int = 8,
                            shingle_n: int = 4) -> DataFrame:
     """(doc_id, j, h): md5 twin of ``minhash_signatures`` — the engine-
     portable hash used by the DuckDB gate oracle (gate.sql_minhash_lsh)."""
-    sh = shingles(docs, n=shingle_n)
+    # NULL text: one NULL shingle, whose SQL-twin hash is NULL and never
+    # joins (concat_ws would hash it as md5(j))
+    sh = shingles(docs, n=shingle_n).where(F.col("shingle").isNotNull())
     js = F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1)))
     return (sh.withColumn("j", js)
             .withColumn("_h", _md5int(F.concat_ws("_", F.col("j"), F.col("shingle"))))

@@ -68,7 +68,9 @@ def streaming_exact_dedup(events: DataFrame, *, key_col: str = "user_id",
 
     This is the streaming twin of ``pipeline.dedup.exact_dedup``: backfill
     runs the batch groupBy, live ingest runs this, and both agree on the
-    keeper set (first-seen by arrival order within the stream).
+    keeper set (first-seen by arrival order within the stream).  Events
+    with NULL content are dropped: there is nothing to hash (hashing
+    ``str(None)`` would make them duplicates of the text "None").
 
     State-size contract: with the default ``state_ttl_ms=None`` the per-key
     seen-hash set grows for the lifetime of the stream — exact forever, but
@@ -112,7 +114,7 @@ def streaming_exact_dedup(events: DataFrame, *, key_col: str = "user_id",
         if state_ttl_ms:
             state.setTimeoutDuration(state_ttl_ms)
 
-    return (events.groupBy(key_col)
+    return (events.where(F.col(content_col).isNotNull()).groupBy(key_col)
             .applyInPandasWithState(dedup_fn, out_schema, state_schema,
                                     "append", timeout))
 
@@ -132,6 +134,7 @@ def streaming_bloom_dedup(events: DataFrame, *, key_col: str = "user_id",
     ≈ (1 − e^{−kn/m})^k — at the defaults, under 1% until ~6k distinct
     items per key, degrading gracefully after.  State size is
     ``bloom_bits/8`` bytes per key, FOREVER, regardless of stream length.
+    Events with NULL content are dropped, as in the exact variant.
     Emitted rows carry ``distinct_seen`` (the filter's insert count) so a
     monitor can alert when a key approaches its false-positive budget."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -176,6 +179,6 @@ def streaming_bloom_dedup(events: DataFrame, *, key_col: str = "user_id",
                     "distinct_seen": n_seen})
         state.update((bytes(bits.tobytes()), n_seen))
 
-    return (events.groupBy(key_col)
+    return (events.where(F.col(content_col).isNotNull()).groupBy(key_col)
             .applyInPandasWithState(dedup_fn, out_schema, state_schema,
                                     "append", GroupStateTimeout.NoTimeout))

@@ -67,6 +67,17 @@ def test_minhash_fast_path_finds_planted_neardups(spark):
     assert not any(2 in p for p in a)
 
 
+def test_minhash_null_text_pairs_with_nothing(spark):
+    """NULL text has no shingles: no pair, least of all with the literal
+    text "None" (the fused kernel once hashed NULL as that string)."""
+    from city2graph_spark.pipeline.dedup import minhash_lsh_pairs_md5
+    docs = spark.createDataFrame(
+        [(0, None), (1, None), (2, "None"), (3, "None")],
+        "doc_id long, text string")
+    for pairs in (minhash_lsh_pairs, minhash_lsh_pairs_md5):
+        assert {(r.doc_a, r.doc_b) for r in pairs(docs).collect()} == {(2, 3)}
+
+
 def test_exact_dedup_finds_planted_dupes(spark):
     docs = spark.createDataFrame(
         [(0, "aaa bbb"), (1, "ccc"), (2, "aaa bbb"), (3, "aaa bbb")],
@@ -222,6 +233,38 @@ def test_streaming_bloom_dedup_bounded_state(spark):
         assert all(max(v) <= 6000 for v in per_key.values())
     finally:
         q.stop()
+
+
+def test_streaming_dedup_drops_null_content(spark):
+    """NULL content is dropped by both streaming dedups, never hashed as
+    the text "None"."""
+    import datetime as dt
+
+    from city2graph_spark.streaming.windows import (
+        EVENTS_SCHEMA,
+        read_event_stream,
+        run_stream_to_memory,
+        streaming_bloom_dedup,
+        streaming_exact_dedup,
+    )
+    t = dt.datetime(2024, 1, 1)
+    d = tempfile.mkdtemp()
+    try:
+        spark.createDataFrame(
+            [(0, t, 7, "view", 1.0, None), (1, t, 7, "view", 1.0, "None"),
+             (2, t, 7, "view", 1.0, None), (3, t, 7, "view", 1.0, "None")],
+            EVENTS_SCHEMA).coalesce(1).write.parquet(f"{d}/events")
+        for name, op in (("null_exact", streaming_exact_dedup),
+                         ("null_bloom", streaming_bloom_dedup)):
+            q = run_stream_to_memory(op(read_event_stream(spark, f"{d}/events")),
+                                     name, mode="append")
+            try:
+                got = spark.sql(f"SELECT event_id FROM {name}").collect()
+                assert [r.event_id for r in got] == [1]
+            finally:
+                q.stop()
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_session_windows_gap_semantics(spark):

@@ -8,6 +8,7 @@ from city2graph_spark.operators.topology import (
     canonicalize_edges,
     connected_components,
     dual_graph,
+    minimum_spanning_forest,
     remove_isolated_components,
     segments_to_graph,
     symmetrize_edges,
@@ -101,3 +102,13 @@ def test_node_link_round_trip(spark):
     # nodes=None derives the id set from the links
     nl2 = to_node_link(None, edges)
     assert {n["id"] for n in nl2["nodes"]} == {0, 1, 2}
+
+
+def test_spanning_forest_keeps_lightest_parallel_edge(spark):
+    """(1,2) appears at weights 5 and 1: the forest must use weight 1."""
+    e = spark.createDataFrame(
+        [(1, 2, 5.0), (2, 1, 1.0), (2, 3, 2.0), (1, 3, 3.0)],
+        "u long, v long, weight double").coalesce(1)
+    got = {(r.u, r.v, r.weight)
+           for r in minimum_spanning_forest(e).collect()}
+    assert got == {(1, 2, 1.0), (2, 3, 2.0)}
