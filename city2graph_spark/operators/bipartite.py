@@ -3,74 +3,21 @@
 (/root/reference/city2graph/proximity.py:2138-2406 `_directed_graph`,
 1609-1756 `bridge_nodes`).
 
-Same two-phase exact strategy as the unipartite kNN: per-superblock local
-top-k kernel (probe side = home-cell src points, candidate side = dst points
-exploded to their 3×3 halo), per-point certificate, variable-radius retry,
-broadcast residual.  No self-exclusion: src and dst are distinct layers
+``knn_graph_bipartite`` runs the unipartite kNN itself
+(``proximity._knn_edges``) with the dst layer as the candidate set: the same
+salted per-superblock kernel, per-point certificate, variable-radius retry
+and broadcast residual.  No self-exclusion: src and dst are distinct layers
 (the reference queries the dst KD-tree with plain ``k``)."""
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index import explode_cells_in_box, explode_ring, with_cell
-from .proximity import _dist, _persist
-
-
-def _bi_topk_kernel(k: int, metric: str):
-    import numpy as np
-    import pandas as pd
-
-    empty = {"src": pd.Series(dtype="int64"), "dst": pd.Series(dtype="int64"),
-             "weight": pd.Series(dtype="float64")}
-
-    def kernel(rows: "pd.DataFrame") -> "pd.DataFrame":
-        home = ((rows["side"] == 0) & (rows["cell"] == rows["qcell"])).to_numpy()
-        cmask = (rows["side"] == 1).to_numpy()
-        if not home.any() or not cmask.any():
-            return pd.DataFrame(empty)
-        order = np.argsort(rows["node_id"].to_numpy()[cmask], kind="stable")
-        cid = rows["node_id"].to_numpy()[cmask][order]
-        cx = rows["x"].to_numpy()[cmask][order]
-        cy = rows["y"].to_numpy()[cmask][order]
-        pid = rows["node_id"].to_numpy()[home]
-        px = rows["x"].to_numpy()[home]
-        py = rows["y"].to_numpy()[home]
-        nc = len(cid)
-        kk = min(k, nc)
-        out = []
-        chunk = max(1, int(4_000_000 / nc))
-        m = min(kk + 8, nc)
-        for s in range(0, len(pid), chunk):
-            cpid, cpx, cpy = pid[s:s + chunk], px[s:s + chunk], py[s:s + chunk]
-            dx = cpx[:, None] - cx[None, :]
-            dy = cpy[:, None] - cy[None, :]
-            if metric == "manhattan":
-                dist = np.abs(dx) + np.abs(dy)
-            else:
-                dist = np.sqrt(dx * dx + dy * dy)
-            if m < nc:
-                part = np.argpartition(dist, m - 1, axis=1)[:, :m]
-            else:
-                part = np.broadcast_to(np.arange(nc), (len(cpid), nc)).copy()
-            sel_d = np.take_along_axis(dist, part, axis=1)
-            sel_i = cid[part]
-            o1 = np.argsort(sel_i, axis=1, kind="stable")
-            sel_d = np.take_along_axis(sel_d, o1, axis=1)
-            sel_i = np.take_along_axis(sel_i, o1, axis=1)
-            o2 = np.argsort(sel_d, axis=1, kind="stable")[:, :kk]
-            top_d = np.take_along_axis(sel_d, o2, axis=1)
-            top_i = np.take_along_axis(sel_i, o2, axis=1)
-            out.append(pd.DataFrame({
-                "src": np.repeat(cpid, kk),
-                "dst": top_i.ravel(),
-                "weight": top_d.ravel()}))
-        return pd.concat(out) if out else pd.DataFrame(empty)
-
-    return kernel
+from ..index import explode_ring, with_cell
+from .proximity import _dist, _knn_edges
 
 
 def knn_graph_bipartite(src_pts: DataFrame, dst_pts: DataFrame, k: int, *,
@@ -79,62 +26,7 @@ def knn_graph_bipartite(src_pts: DataFrame, dst_pts: DataFrame, k: int, *,
     Returns (src, dst, weight)."""
     from ..crs import ensure_same_crs
     ensure_same_crs(src_pts, dst_pts)
-    B = float(cell_size)
-    s = with_cell(src_pts, cell_size=B)
-    d = with_cell(dst_pts, cell_size=B)
-    probes = s.select("node_id", "x", "y", "cell") \
-        .withColumn("qcell", F.col("cell")).withColumn("side", F.lit(0))
-    cands = explode_ring(d, ring=1, cx="cell_cx", cy="cell_cy", out="qcell") \
-        .select("node_id", "x", "y", "cell", "qcell") \
-        .withColumn("side", F.lit(1))
-    both = probes.unionByName(cands)
-    top1 = _persist(both.groupBy("qcell").applyInPandas(
-        _bi_topk_kernel(k, metric), "src long, dst long, weight double"))
-
-    agg1 = top1.groupBy("src").agg(F.max("weight").alias("_kth"),
-                                   F.count("*").alias("_cnt"))
-    margin = F.least(
-        F.col("px") - (F.floor(F.col("px") / B) - 1) * B,
-        (F.floor(F.col("px") / B) + 2) * B - F.col("px"),
-        F.col("py") - (F.floor(F.col("py") / B) - 1) * B,
-        (F.floor(F.col("py") / B) + 2) * B - F.col("py"))
-    stats = _persist(
-        src_pts.select(F.col("node_id").alias("src"),
-                       F.col("x").alias("px"), F.col("y").alias("py"))
-        .join(agg1, "src", "left")
-        .withColumn("_cnt", F.coalesce(F.col("_cnt"), F.lit(0)))
-        .withColumn("_margin", margin))
-
-    certified = stats.where((F.col("_cnt") == k) & (F.col("_kth") < F.col("_margin")))
-    top_c = top1.join(certified.select("src"), "src", "left_semi")
-
-    build = d.select(F.col("node_id").alias("dst"), F.col("x").alias("bx"),
-                     F.col("y").alias("by"), F.col("cell").alias("bcell"))
-
-    def rank_topk(cand: DataFrame) -> DataFrame:
-        w = Window.partitionBy("src").orderBy(F.col("weight").asc(), F.col("dst").asc())
-        return (cand.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") <= k).drop("_rn"))
-
-    retry = stats.where((F.col("_cnt") == k) & (F.col("_kth") >= F.col("_margin")))
-    retry = explode_cells_in_box(
-        retry, F.col("px") - F.col("_kth"), F.col("py") - F.col("_kth"),
-        F.col("px") + F.col("_kth"), F.col("py") + F.col("_kth"), cell_size=B)
-    top2 = rank_topk(
-        retry.join(build, retry.qcell == build.bcell)
-        .withColumn("weight", _dist(metric, F.col("px") - F.col("bx"),
-                                    F.col("py") - F.col("by")))
-        .select("src", "dst", "weight"))
-
-    sparse = stats.where(F.col("_cnt") < k).select("src", "px", "py")
-    top3 = rank_topk(
-        F.broadcast(sparse).crossJoin(build.drop("bcell"))
-        .withColumn("weight", _dist(metric, F.col("px") - F.col("bx"),
-                                    F.col("py") - F.col("by")))
-        .select("src", "dst", "weight"))
-
-    return (top_c.select("src", "dst", "weight")
-            .unionByName(top2).unionByName(top3))
+    return _knn_edges(src_pts, dst_pts, k, metric, float(cell_size))
 
 
 def fixed_radius_bipartite(src_pts: DataFrame, dst_pts: DataFrame,

@@ -85,14 +85,6 @@ def snap_points(points: DataFrame, node_xy: DataFrame, *,
                     F.col("weight").alias("snap_dist"))
 
 
-def network_costs_df(spark, graph: BroadcastGraph, sources,
-                     cutoff: float | None = None) -> DataFrame:
-    rows = [(s, t, c) for (s, t, c) in graph.pairwise_costs(sources, cutoff=cutoff)]
-    return spark.createDataFrame(rows or [(None, None, None)],
-                                 "source long, target long, cost double") \
-        .where(F.col("source").isNotNull())
-
-
 def filter_graph_by_distance(nodes: DataFrame, edges: DataFrame,
                              center_xy: tuple[float, float], distance: float,
                              *, weight: str = "weight") -> DataFrame:

@@ -7,8 +7,9 @@ relative_neighborhood_graph 1084-1184, waxman_graph 1440-1567) over
 arithmetic (cell equi-joins, window ranks, anti-joins); the CPU-bound
 per-block work runs in numpy kernels behind grouped pandas UDFs:
 
-- ``knn_graph`` phase 1: ``applyInPandas`` per (superblock, salt), local
-  top-k with an exactness certificate per probe;
+- ``knn_graph`` and ``bipartite.knn_graph_bipartite`` phase 1 (both run
+  ``_knn_edges``): ``applyInPandas`` per (superblock, salt), local top-k
+  with an exactness certificate per probe;
 - ``gabriel_graph`` / ``relative_neighborhood_graph`` with ``r_cand``:
   ``applyInPandas`` per superblock, the empty-region witness test;
 - ``delaunay_graph``: Bowyer–Watson on the driver, or per tile in
@@ -87,9 +88,14 @@ def estimate_knn_cell(n: int, k: int, domain: float = 5000.0,
     return max(b, domain / (1 << 16))
 
 
-def _local_topk_kernel(k: int, metric: str, block_size: float):
-    """Build the cogrouped-applyInPandas kernel: per superblock, exact
-    top-k of every probe against the block's 3×3-halo candidate set.
+def _local_topk_kernel(k: int, metric: str, block_size: float,
+                       self_join: bool):
+    """Build the grouped-applyInPandas kernel: per superblock, exact top-k
+    of every probe against the block's 3×3-halo candidate set.
+
+    ``self_join``: probe rows are also candidates and a probe never matches
+    its own id; otherwise only the non-probe rows are candidates and ids are
+    not compared (they may repeat across two layers).
 
     All arithmetic is numpy float64 with the same expression tree as the
     column/oracle path (dx·dx + dy·dy → sqrt), so distances are bit-identical
@@ -107,31 +113,27 @@ def _local_topk_kernel(k: int, metric: str, block_size: float):
              "py": pd.Series(dtype="float64")}
 
     def kernel(rows: "pd.DataFrame") -> "pd.DataFrame":
-        # One row per (point, covered block): the copy whose home cell equals
-        # the group's query cell is a probe; every row is a candidate.
+        # One row per (point, covered block); ``_probe`` marks the rows that
+        # probe in this group (a home copy probes in exactly ONE salt group).
         # (Single-sided grouping — Spark 4.1's cogroup prunes the right
         # side's columns under generator inputs, so cogroup is avoided.)
         # The certificate is computed HERE (kth distance strictly inside the
         # exact per-point margin to the scanned 3×3 region boundary) so the
         # driver-side plan needs no full-size anchor join; probe coords are
         # emitted only on uncertified rows.
-        # Salted hot blocks carry an explicit probe flag (the home copy is a
-        # probe in exactly ONE salt group but a candidate in all of them).
-        if "_probe" in rows.columns:
-            home = rows["_probe"].to_numpy(bool)
-        else:
-            home = (rows["cell"] == rows["qcell"]).to_numpy()
+        home = rows["_probe"].to_numpy(bool)
         if not home.any():
             return pd.DataFrame(empty)
-        order = np.argsort(rows["node_id"].to_numpy(), kind="stable")
-        cid = rows["node_id"].to_numpy()[order]
-        cx = rows["x"].to_numpy()[order]
-        cy = rows["y"].to_numpy()[order]
+        cand = rows if self_join else rows[~home]
+        order = np.argsort(cand["node_id"].to_numpy(), kind="stable")
+        cid = cand["node_id"].to_numpy()[order]
+        cx = cand["x"].to_numpy()[order]
+        cy = cand["y"].to_numpy()[order]
         pid = rows["node_id"].to_numpy()[home]
         px = rows["x"].to_numpy()[home]
         py = rows["y"].to_numpy()[home]
         nc = len(cid)
-        kk = min(k, nc - 1)
+        kk = min(k, nc - 1 if self_join else nc)
         bx = np.floor(px / B)
         by = np.floor(py / B)
         margin = np.minimum.reduce([px - (bx - 1) * B, (bx + 2) * B - px,
@@ -160,7 +162,8 @@ def _local_topk_kernel(k: int, metric: str, block_size: float):
                 # before (arbitrary there too); the (weight, id) tie order
                 # below runs on the true sqrt weights either way.
                 dist = dx * dx + dy * dy
-            dist[cpid[:, None] == cid[None, :]] = np.inf  # exclude self
+            if self_join:
+                dist[cpid[:, None] == cid[None, :]] = np.inf  # exclude self
             if m < nc:
                 part = np.argpartition(dist, m - 1, axis=1)[:, :m]
             else:
@@ -224,90 +227,88 @@ def _apply_duplicate_edges(edges: DataFrame, duplicate_edges: bool, *,
     return symmetrize_edges(edges, src=src, dst=dst)
 
 
-def knn_graph(points: DataFrame, k: int, *, cell_size: float,
-              metric: str = "euclidean", directed: bool = False,
-              salt_target: int = 100_000,
-              duplicate_edges: bool = False) -> DataFrame:
-    """Exact k-nearest-neighbor graph over (node_id, x, y).
-
-    Reference semantics (proximity.py:875-884): per node, k nearest by the
-    chosen metric, self excluded; undirected output canonicalises (u,v) to
-    unordered pairs and dedupes.  Ties break by (distance, dst) — the same
-    deterministic order the oracle SQL uses.
-
-    Strategy: ``cell_size`` is the *superblock* size.  Phase 1 computes each
-    block's probes against its 3×3-halo candidates with a vectorized numpy
-    kernel inside a cogrouped ``applyInPandas`` (pairs never materialise in
-    the shuffle — only k edges per probe come back).  Phase 2 re-probes the
-    per-point certificate failures with a variable-radius cell join; a
-    residual broadcast fallback handles probes with fewer than k candidates
-    anywhere in the halo.  Exact at every phase.
-
-    Returns (src, dst, weight).
-    """
-    if duplicate_edges and directed:
-        _apply_duplicate_edges(None, True, directed=True)  # raises
-    B = float(cell_size)
-    pts = with_cell(points, cell_size=B)
-    build = pts.select(
+def _knn_edges(pts: DataFrame, dst_pts: DataFrame | None, k: int,
+               metric: str, B: float, salt_target: int = 100_000
+               ) -> DataFrame:
+    """Exact directed kNN edges (src, dst, weight) with superblock size
+    ``B``: each ``pts`` row → its k nearest ``dst_pts`` rows, or, with
+    ``dst_pts=None``, its k nearest other ``pts`` rows (self excluded by
+    id).  Ties break by (distance, dst)."""
+    self_join = dst_pts is None
+    src = with_cell(pts, cell_size=B)
+    dst = src if self_join else with_cell(dst_pts, cell_size=B)
+    build = dst.select(
         F.col("node_id").alias("dst"), F.col("x").alias("bx"),
         F.col("y").alias("by"), F.col("cell").alias("bcell"))
 
     def rank_topk(cand: DataFrame) -> DataFrame:
-        cand = cand.where(F.col("src") != F.col("dst"))
+        if self_join:
+            cand = cand.where(F.col("src") != F.col("dst"))
         w = Window.partitionBy("src").orderBy(F.col("weight").asc(), F.col("dst").asc())
         return (cand.withColumn("_rn", F.row_number().over(w))
                     .where(F.col("_rn") <= k).drop("_rn"))
 
     # ---- phase 1: per-superblock local kNN (grouped pandas kernel) -----
-    # Every point is exploded to the 9 blocks it can serve as a candidate
-    # for; the home-cell copy doubles as the probe.  The kernel computes
-    # the exactness certificate per probe (kth < margin-to-scanned-region)
-    # and emits sentinel dst=-1 rows for candidate-less probes, so the
-    # driver-side plan never joins against the full point set.  Node ids
-    # must be non-negative (the derived/doc ids always are).
-    cands = explode_ring(pts, ring=1, cx="cell_cx", cy="cell_cy", out="qcell") \
+    # Every candidate is exploded to the 9 blocks it can serve; a probe is
+    # the home-cell copy (self-join) or the src row itself (two layers).
+    # The kernel computes the exactness certificate per probe
+    # (kth < margin-to-scanned-region) and emits sentinel weight=inf rows
+    # for candidate-less probes, so the driver-side plan never joins
+    # against the full point set.
+    cands = explode_ring(dst, ring=1, cx="cell_cx", cy="cell_cy", out="qcell") \
         .select("node_id", "x", "y", "cell", "qcell")
     # urban-core skew guard: a superblock with more than ``salt_target``
-    # home points splits into ⌈count/salt_target⌉ salted sub-tasks — probes
+    # home probes splits into ⌈count/salt_target⌉ salted sub-tasks — probes
     # hash-partitioned across salts, candidates replicated to every salt, a
-    # per-row flag marks the one group where the home copy probes.  Result
+    # per-row flag marks the one group where a home row probes.  Result
     # identical, task size bounded.  (AQE cannot split a single pandas
     # group; this does.)
-    hot = (pts.groupBy("cell").count()
+    hot = (src.groupBy("cell").count()
            .where(F.col("count") > salt_target)
            .select(F.col("cell").alias("qcell"),
                    F.ceil(F.col("count") / salt_target).cast("int")
                    .alias("_nsalt")))
+
+    def salted(rows: DataFrame) -> DataFrame:
+        return (rows.join(F.broadcast(hot), "qcell", "left")
+                .withColumn("_nsalt", F.coalesce("_nsalt", F.lit(1)))
+                .withColumn("_psalt", F.pmod(F.xxhash64("node_id"),
+                                             F.col("_nsalt"))))
+
     # (Two salting-bypass variants were measured this round and both
     # reverted: an isEmpty()-branch paid an extra blocking job per call
     # (knn 1.81 → 2.55 s whole-process medians), and a lazy anti-join/
     # union split measured 1.58 → 1.88 s on a quiet host — the per-row
     # hash+Generate below is cheaper than a second broadcast probe pass
     # in the regime the bench runs.  See OPTIMIZATION_r07.md.)
-    cands = (cands.join(F.broadcast(hot), "qcell", "left")
-             .withColumn("_nsalt", F.coalesce("_nsalt", F.lit(1)))
-             .withColumn("_psalt", F.pmod(F.xxhash64("node_id"),
-                                          F.col("_nsalt")))
-             .withColumn("_salt", F.explode(F.sequence(
-                 F.lit(0), F.col("_nsalt") - 1)))
-             .withColumn("_probe", (F.col("cell") == F.col("qcell"))
-                         & (F.col("_salt") == F.col("_psalt")))
-             .select("node_id", "x", "y", "cell", "qcell", "_salt", "_probe"))
+    cols = ["node_id", "x", "y", "cell", "qcell", "_salt", "_probe"]
+    cands = salted(cands).withColumn("_salt", F.explode(F.sequence(
+        F.lit(0), F.col("_nsalt") - 1)))
+    if self_join:
+        cands = cands.withColumn("_probe", (F.col("cell") == F.col("qcell"))
+                                 & (F.col("_salt") == F.col("_psalt"))) \
+            .select(*cols)
+    else:
+        probes = (salted(src.withColumn("qcell", F.col("cell")))
+                  .withColumn("_salt", F.col("_psalt"))
+                  .withColumn("_probe", F.lit(True)))
+        cands = (cands.withColumn("_probe", F.lit(False)).select(*cols)
+                 .unionByName(probes.select(*cols)))
     top1 = _persist(
         _kernel_exchange(cands, "qcell", "_salt")
         .groupBy("qcell", "_salt")
-        .applyInPandas(_local_topk_kernel(k, metric, B),
+        .applyInPandas(_local_topk_kernel(k, metric, B, self_join),
                        "src long, dst long, weight double, cert boolean, "
                        "px double, py double"))
     top_certified = top1.where(F.col("cert"))
 
     # Only the (rare) uncertified probes need driver-side stats.
+    found = F.col("weight") < F.lit(float("inf"))
     stats1 = _persist(
         top1.where(~F.col("cert"))
         .groupBy("src")
-        .agg(F.max(F.when(F.col("dst") >= 0, F.col("weight"))).alias("_kth"),
-             F.sum(F.when(F.col("dst") >= 0, 1).otherwise(0)).alias("_cnt"),
+        .agg(F.max(F.when(found, F.col("weight"))).alias("_kth"),
+             F.sum(F.when(found, 1).otherwise(0)).alias("_cnt"),
              F.first("px").alias("px"), F.first("py").alias("py")))
 
     # ---- phase 2: boundary exchange for uncertified probes -----------
@@ -332,10 +333,35 @@ def knn_graph(points: DataFrame, k: int, *, cell_size: float,
                                          F.col("py") - F.col("by"))))
     top3 = rank_topk(cand3.select("src", "dst", "weight"))
 
-    edges = (top_certified.select("src", "dst", "weight")
-             .unionByName(top2.select("src", "dst", "weight"))
-             .unionByName(top3.select("src", "dst", "weight")))
+    return (top_certified.select("src", "dst", "weight")
+            .unionByName(top2.select("src", "dst", "weight"))
+            .unionByName(top3.select("src", "dst", "weight")))
 
+
+def knn_graph(points: DataFrame, k: int, *, cell_size: float,
+              metric: str = "euclidean", directed: bool = False,
+              salt_target: int = 100_000,
+              duplicate_edges: bool = False) -> DataFrame:
+    """Exact k-nearest-neighbor graph over (node_id, x, y).
+
+    Reference semantics (proximity.py:875-884): per node, k nearest by the
+    chosen metric, self excluded; undirected output canonicalises (u,v) to
+    unordered pairs and dedupes.  Ties break by (distance, dst) — the same
+    deterministic order the oracle SQL uses.
+
+    Strategy: ``cell_size`` is the *superblock* size.  Phase 1 computes each
+    block's probes against its 3×3-halo candidates with a vectorized numpy
+    kernel inside a grouped ``applyInPandas`` (pairs never materialise in
+    the shuffle — only k edges per probe come back).  Phase 2 re-probes the
+    per-point certificate failures with a variable-radius cell join; a
+    residual broadcast fallback handles probes with fewer than k candidates
+    anywhere in the halo.  Exact at every phase.
+
+    Returns (src, dst, weight).
+    """
+    if duplicate_edges and directed:
+        _apply_duplicate_edges(None, True, directed=True)  # raises
+    edges = _knn_edges(points, None, k, metric, float(cell_size), salt_target)
     if directed:
         return edges
     # undirected: canonical unordered pair, dedupe (proximity.py:879-884 via
@@ -808,7 +834,7 @@ def waxman_graph(points: DataFrame, beta: float, r0: float, seed: int, *,
 
 
 def delaunay_graph(points: DataFrame, *, driver_switch: int = 20_000,
-                   tile_points: int = 2500, max_rounds: int = 6,
+                   tile_points: int = 2500,
                    duplicate_edges: bool = False) -> DataFrame:
     """Delaunay triangulation edges (reference proximity.py:890-982: all
     2-combinations of every simplex, deduped).
@@ -820,8 +846,7 @@ def delaunay_graph(points: DataFrame, *, driver_switch: int = 20_000,
     is gone.
     """
     n = points.count()
-    out = (delaunay_graph_distributed(points, tile_points=tile_points,
-                                      max_rounds=max_rounds)
+    out = (delaunay_graph_distributed(points, tile_points=tile_points)
            if n > driver_switch else _delaunay_driver(points))
     return _apply_duplicate_edges(out, duplicate_edges, src="u", dst="v")
 
@@ -877,7 +902,6 @@ def _global_hull(points: DataFrame) -> list[tuple[int, float, float]]:
 
 
 def delaunay_graph_distributed(points: DataFrame, *, tile_points: int = 2500,
-                               max_rounds: int = 6,
                                boundary_cap: int | None = None,
                                debug: bool = False) -> DataFrame:
     """Exact distributed Delaunay in ONE data pass + one boundary pass
@@ -905,8 +929,7 @@ def delaunay_graph_distributed(points: DataFrame, *, tile_points: int = 2500,
     Scale shape: one applyInPandas over tiles (~``tile_points`` gathered
     points each, 9× ring-explode shuffle), two cell-cover verify joins, no
     full gather anywhere; U and the per-tile hull chains are the only
-    driver-side artifacts.  (``max_rounds`` retained for API compatibility;
-    the pass structure is fixed.)
+    driver-side artifacts.
     """
     import math
 

@@ -24,6 +24,27 @@ def _collect_matrix(df: DataFrame, id_col: str, vec_col: str):
     return ids[order], mat[order]
 
 
+def _ids_vecs(pdf, id_col: str, vec_col: str):
+    return (pdf[id_col].to_numpy().astype(np.int64),
+            np.array(list(pdf[vec_col]), dtype=np.float64))
+
+
+def _norms(mat: np.ndarray) -> np.ndarray:
+    """Row L2 norms, with 1.0 for zero rows (their similarities are 0)."""
+    n = np.sqrt((mat * mat).sum(axis=1))
+    n[n == 0.0] = 1.0
+    return n
+
+
+def _cosine_block(qid: np.ndarray, Q: np.ndarray, bid: np.ndarray,
+                  B: np.ndarray, bnorm: np.ndarray) -> np.ndarray:
+    """Cosine similarity matrix of probe rows ``Q`` against build rows ``B``
+    (one float64 GEMM); a probe against its own id is -inf."""
+    sims = (Q @ B.T) / (_norms(Q)[:, None] * bnorm[None, :])
+    sims[qid[:, None] == bid[None, :]] = -np.inf  # exclude self
+    return sims
+
+
 def _topk_rows(sims: np.ndarray, bid: np.ndarray, kk: int
                ) -> tuple[np.ndarray, np.ndarray]:
     """Per-row exact top-``kk`` under the documented (sim desc, nid asc)
@@ -95,9 +116,7 @@ def cosine_topk(probe: DataFrame, k: int, *, build: DataFrame | None = None,
         if n_build == 0:
             return spark.createDataFrame([], "qid long, nid long, rnk long")
         bids, bmat = _collect_matrix(build, id_col, vec_col)
-        bnorm = np.sqrt((bmat * bmat).sum(axis=1))
-        bnorm[bnorm == 0.0] = 1.0
-        bc = spark.sparkContext.broadcast((bids, bmat, bnorm))
+        bc = spark.sparkContext.broadcast((bids, bmat, _norms(bmat)))
 
         def topk_batches(it):
             import pandas as pd
@@ -106,12 +125,8 @@ def cosine_topk(probe: DataFrame, k: int, *, build: DataFrame | None = None,
             for pdf in it:
                 if len(pdf) == 0:
                     continue
-                qid = pdf[id_col].to_numpy().astype(np.int64)
-                Q = np.array(list(pdf[vec_col]), dtype=np.float64)
-                qn = np.sqrt((Q * Q).sum(axis=1))
-                qn[qn == 0.0] = 1.0
-                sims = (Q @ mat_b.T) / (qn[:, None] * norm_b[None, :])
-                sims[qid[:, None] == ids_b[None, :]] = -np.inf  # exclude self
+                qid, Q = _ids_vecs(pdf, id_col, vec_col)
+                sims = _cosine_block(qid, Q, ids_b, mat_b, norm_b)
                 sel_i, sel_s = _topk_rows(sims, ids_b, kk)
                 keep = np.isfinite(sel_s)
                 rnk = np.broadcast_to(np.arange(1, kk + 1), sel_i.shape)
@@ -134,16 +149,9 @@ def cosine_topk(probe: DataFrame, k: int, *, build: DataFrame | None = None,
         if len(ppdf) == 0 or len(bpdf) == 0:
             return pd.DataFrame({"qid": [], "nid": [], "sim": []}).astype(
                 {"qid": "int64", "nid": "int64", "sim": "float64"})
-        qid = ppdf["qid"].to_numpy().astype(np.int64)
-        Q = np.array(list(ppdf["qvec"]), dtype=np.float64)
-        bid = bpdf["bid"].to_numpy().astype(np.int64)
-        B = np.array(list(bpdf["bvec"]), dtype=np.float64)
-        qn = np.sqrt((Q * Q).sum(axis=1))
-        qn[qn == 0.0] = 1.0
-        bn = np.sqrt((B * B).sum(axis=1))
-        bn[bn == 0.0] = 1.0
-        sims = (Q @ B.T) / (qn[:, None] * bn[None, :])
-        sims[qid[:, None] == bid[None, :]] = -np.inf   # exclude self
+        qid, Q = _ids_vecs(ppdf, "qid", "qvec")
+        bid, B = _ids_vecs(bpdf, "bid", "bvec")
+        sims = _cosine_block(qid, Q, bid, B, _norms(B))
         kk = min(kk_cap, sims.shape[1])
         sel_i, sel_s = _topk_rows(sims, bid, kk)
         keep = np.isfinite(sel_s)
@@ -206,15 +214,9 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float, *,
         if len(ppdf) == 0 or len(bpdf) == 0:
             return pd.DataFrame({"doc_a": [], "doc_b": []}).astype(
                 {"doc_a": "int64", "doc_b": "int64"})
-        qid = ppdf["qid"].to_numpy().astype(np.int64)
-        Q = np.array(list(ppdf["qvec"]), dtype=np.float64)
-        bid = bpdf["bid"].to_numpy().astype(np.int64)
-        B = np.array(list(bpdf["bvec"]), dtype=np.float64)
-        qn = np.sqrt((Q * Q).sum(axis=1))
-        qn[qn == 0.0] = 1.0
-        bn = np.sqrt((B * B).sum(axis=1))
-        bn[bn == 0.0] = 1.0
-        sims = (Q @ B.T) / (qn[:, None] * bn[None, :])
+        qid, Q = _ids_vecs(ppdf, "qid", "qvec")
+        bid, B = _ids_vecs(bpdf, "bid", "bvec")
+        sims = _cosine_block(qid, Q, bid, B, _norms(B))
         hit = (sims >= t) & (qid[:, None] < bid[None, :])
         qi, bi = np.nonzero(hit)
         return pd.DataFrame({"doc_a": qid[qi], "doc_b": bid[bi]})
@@ -222,49 +224,6 @@ def embedding_neardup_pairs(df: DataFrame, threshold: float, *,
     return (pt.groupBy("pchunk", "bchunk")
             .cogroup(bt.groupBy("pchunk", "bchunk"))
             .applyInPandas(block_pairs, "doc_a long, doc_b long"))
-
-
-def cosine_topk_broadcast(probe: DataFrame, k: int, *,
-                          build: DataFrame | None = None,
-                          id_col: str = "vec_id",
-                          vec_col: str = "embedding") -> DataFrame:
-    """Broadcast-build variant of ``cosine_topk`` (the ANN equivalent of a
-    broadcast hash join): right when the index side fits in executor memory
-    — small dims probed by a huge table.  Build side is collected once and
-    broadcast; probes stream through mapInPandas in Arrow batches with one
-    float64 GEMM per batch.  The chunked ``cosine_topk`` is the default —
-    this is the explicitly-opt-in small-index fast path.
-    """
-    build = build if build is not None else probe
-    bids, bmat = _collect_matrix(build, id_col, vec_col)
-    bnorm = np.sqrt((bmat * bmat).sum(axis=1))
-    bnorm[bnorm == 0.0] = 1.0
-    spark = probe.sparkSession
-    bc = spark.sparkContext.broadcast((bids, bmat, bnorm))
-
-    def topk_batches(it):
-        import pandas as pd
-        ids_b, mat_b, norm_b = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            qid = pdf[id_col].to_numpy().astype(np.int64)
-            Q = np.array(list(pdf[vec_col]), dtype=np.float64)
-            qn = np.sqrt((Q * Q).sum(axis=1))
-            qn[qn == 0.0] = 1.0
-            sims = (Q @ mat_b.T) / (qn[:, None] * norm_b[None, :])
-            sims[qid[:, None] == ids_b[None, :]] = -np.inf  # exclude self
-            kk = min(k, sims.shape[1] - 1)
-            if kk <= 0:
-                continue
-            top_i, top_s = _topk_rows(sims, ids_b, kk)
-            keep = np.isfinite(top_s)
-            rnk = np.broadcast_to(np.arange(1, kk + 1), top_i.shape)
-            qq = np.repeat(qid, kk).reshape(-1, kk)
-            yield pd.DataFrame({"qid": qq[keep], "nid": top_i[keep],
-                                "rnk": rnk[keep].astype(np.int64)})
-
-    return probe.mapInPandas(topk_batches, "qid long, nid long, rnk long")
 
 
 def ann_lsh_candidates(df: DataFrame, *, n_planes: int = 12, n_bands: int = 4,

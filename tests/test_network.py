@@ -16,6 +16,13 @@ from city2graph_spark.operators.net import (
     network_knn_graph,
     snap_points,
 )
+from city2graph_spark.operators.proximity import _knn_edges
+
+
+def _layer(spark, xy, ids):
+    return spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in zip(ids, xy)],
+        "node_id long, x double, y double")
 
 
 @pytest.fixture(scope="module")
@@ -23,24 +30,48 @@ def layers(spark):
     rng = np.random.default_rng(11)
     a = rng.uniform(0, 1000, (40, 2))
     b = rng.uniform(0, 1000, (25, 2))
-    df_a = spark.createDataFrame(
-        [(i, float(x), float(y)) for i, (x, y) in enumerate(a)],
-        "node_id long, x double, y double")
-    df_b = spark.createDataFrame(
-        [(i, float(x), float(y)) for i, (x, y) in enumerate(b)],
-        "node_id long, x double, y double")
+    df_a = _layer(spark, a, range(len(a)))
+    df_b = _layer(spark, b, range(len(b)))
     return df_a, df_b, a, b
 
 
-def test_bipartite_knn_exact(layers):
+def _bi_knn_want(a, aid, b, bid, k, metric="euclidean"):
+    """numpy oracle: each a-row's k nearest b-rows, ties by b id."""
+    diff = a[:, None, :] - b[None, :, :]
+    d = (np.abs(diff).sum(-1) if metric == "manhattan"
+         else np.sqrt((diff ** 2).sum(-1)))
+    return {(int(aid[i]), int(bid[j])) for i in range(len(a))
+            for j in np.lexsort((bid, d[i]))[:k]}
+
+
+def _edge_pairs(df):
+    rows = [(r.src, r.dst) for r in df.collect()]
+    assert len(rows) == len(set(rows)), "duplicate edges"
+    return set(rows)
+
+
+def test_bipartite_knn_exact(spark, layers):
     df_a, df_b, a, b = layers
+    ia, ib = np.arange(len(a)), np.arange(len(b))
     for cell in (100.0, 2000.0, 20.0):  # certified / single-block / retry paths
-        got = {(r.src, r.dst) for r in
-               knn_graph_bipartite(df_a, df_b, 3, cell_size=cell).collect()}
-        d = np.sqrt(((a[:, None, :] - b[None, :, :]) ** 2).sum(-1))
-        want = {(i, int(j)) for i in range(len(a))
-                for j in np.lexsort((np.arange(len(b)), d[i]))[:3]}
-        assert got == want, f"cell={cell}"
+        got = _edge_pairs(knn_graph_bipartite(df_a, df_b, 3, cell_size=cell))
+        assert got == _bi_knn_want(a, ia, b, ib, 3), f"cell={cell}"
+    # negative ids, ids shared between the layers, and one source point far
+    # from every destination (no candidate in its halo ⇒ residual broadcast)
+    a2 = np.vstack([a, [[1e6, 1e6]]])
+    ia2 = np.arange(len(a2)) - 20          # -20..20
+    ib2 = np.arange(len(b)) - 5            # -5..19, all shared with ia2
+    src, dst = _layer(spark, a2, ia2), _layer(spark, b, ib2)
+    for k, cell, metric in ((3, 100.0, "euclidean"), (3, 20.0, "manhattan"),
+                            (len(b) + 5, 300.0, "euclidean")):  # k > |dst|
+        got = _edge_pairs(knn_graph_bipartite(src, dst, k, cell_size=cell,
+                                              metric=metric))
+        assert got == _bi_knn_want(a2, ia2, b, ib2, k, metric), (k, metric)
+    # forced salt split: one 2000-unit block holds the 40 near probes, so a
+    # salt target of 4 spreads them over 10 kernel groups
+    got = _edge_pairs(_knn_edges(src, dst, 3, "euclidean", 2000.0,
+                                 salt_target=4))
+    assert got == _bi_knn_want(a2, ia2, b, ib2, 3)
 
 
 def test_bipartite_radius(layers):

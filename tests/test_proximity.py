@@ -78,9 +78,16 @@ def edge_set(df):
              r.dst if "dst" in df.columns else r.v) for r in df.collect()}
 
 
-def test_knn_exact(pts_df, pts_np):
+def test_knn_exact(spark, pts_df, pts_np):
     got = edge_set(knn_graph(pts_df, 5, cell_size=400.0))
     assert got == brute_knn(pts_np, 5)
+    # negative ids (shifting keeps the id order, so ties break alike); the
+    # small cells send most probes through the uncertified-probe stats
+    neg = spark.createDataFrame(
+        [(int(i) - 100, float(x), float(y)) for i, (x, y) in enumerate(pts_np)],
+        "node_id long, x double, y double")
+    got = edge_set(knn_graph(neg, 5, cell_size=40.0))
+    assert got == {(i - 100, j - 100) for i, j in brute_knn(pts_np, 5)}
 
 
 def test_knn_exact_small_cells_forces_phase2(pts_df, pts_np):

@@ -58,13 +58,12 @@ def test_cosine_topk_small_build_dispatch_identical(emb_df):
 
 def test_cosine_topk_chunked_equals_broadcast(emb_df):
     """Many tiny chunks (rows_per_chunk=17 → multi-block merge) must give
-    the identical ranking as the broadcast small-index path."""
-    from city2graph_spark.pipeline.simsearch import cosine_topk_broadcast
+    the identical ranking as the broadcast small-index path, which the
+    default call takes when the build side fits one chunk."""
     df, _ = emb_df
     a = {(r.qid, r.nid, r.rnk)
          for r in cosine_topk(df, 5, rows_per_chunk=17).collect()}
-    b = {(r.qid, r.nid, r.rnk)
-         for r in cosine_topk_broadcast(df, 5).collect()}
+    b = {(r.qid, r.nid, r.rnk) for r in cosine_topk(df, 5).collect()}
     assert a == b
 
 
