@@ -28,12 +28,17 @@ Scale notes (10^12 rows):
   well-distributed key; AQE skew-join plus ``index.with_salt`` handle hot
   urban-core cells;
 - kNN is exact via two-phase local-search → boundary-exchange: phase 1
-  scans only the 3×3 halo (O(n·density) candidate pairs), phase 2 re-probes
-  only the points whose kth-neighbor certificate fails (a per-row variable
-  halo sized by the phase-1 kth distance — still a cell equi-join);
-- the residual fallback (fewer than k candidates in the phase-2 halo) is a
+  scans only the 3×3 halo (O(n·density) candidate pairs) and its kernel
+  certifies each probe itself, returning k edges per certified probe and
+  one stats row (kth distance, found count, coordinates) per uncertified
+  one; phase 2 re-probes only those (a per-row variable halo sized by the
+  kth distance — still a cell equi-join);
+- the residual fallback (fewer than k candidates in the phase-1 halo) is a
   broadcast of the handful of failing probes against one full scan — exact,
-  and empty for any sane cell size.
+  and empty for any sane cell size;
+- phase 1 runs once into an eager ``localCheckpoint``; phase 2 and the
+  residual are planned only when an accumulator counted an uncertified
+  probe, so a fully certified call pays no plan or job for them.
 """
 
 from __future__ import annotations
@@ -42,20 +47,12 @@ import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..index import explode_cells_in_box, explode_ring, with_cell
 
 # float64 machine epsilon — the reference's RNG lune tolerance is
 # dij² − eps·max(dij²,1)·64 (/root/reference/city2graph/proximity.py:1176).
 _EPS64 = 2.220446049250313e-16
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    """Persist a sub-DAG consumed by several downstream branches.  On a real
-    cluster this is where an Iceberg snapshot checkpoint would land (north
-    rule resumability); in-process, MEMORY_AND_DISK gives the same reuse."""
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _kernel_exchange(df: DataFrame, *keys: str) -> DataFrame:
@@ -89,13 +86,21 @@ def estimate_knn_cell(n: int, k: int, domain: float = 5000.0,
 
 
 def _local_topk_kernel(k: int, metric: str, block_size: float,
-                       self_join: bool):
+                       self_join: bool, uncertified):
     """Build the grouped-applyInPandas kernel: per superblock, exact top-k
     of every probe against the block's 3×3-halo candidate set.
 
     ``self_join``: probe rows are also candidates and a probe never matches
     its own id; otherwise only the non-probe rows are candidates and ids are
     not compared (they may repeat across two layers).
+
+    A probe is certified when it found k candidates and its kth distance is
+    strictly inside the exact margin to the scanned 3×3 region's boundary.
+    A certified probe emits its k edges (``cert`` true, px/py null); an
+    uncertified one emits ONE stats row — ``cert`` false, ``dst`` = number
+    of candidates found (≤ k), ``weight`` = kth found distance (inf if
+    none), px/py its coordinates — and adds 1 to ``uncertified`` (anything
+    with ``add``: a Spark accumulator in ``_knn_edges``).
 
     All arithmetic is numpy float64 with the same expression tree as the
     column/oracle path (dx·dx + dy·dy → sqrt), so distances are bit-identical
@@ -106,51 +111,34 @@ def _local_topk_kernel(k: int, metric: str, block_size: float,
     import pandas as pd
 
     B = float(block_size)
-    empty = {"src": pd.Series(dtype="int64"), "dst": pd.Series(dtype="int64"),
-             "weight": pd.Series(dtype="float64"),
-             "cert": pd.Series(dtype="bool"),
-             "px": pd.Series(dtype="float64"),
-             "py": pd.Series(dtype="float64")}
 
     def kernel(rows: "pd.DataFrame") -> "pd.DataFrame":
         # One row per (point, covered block); ``_probe`` marks the rows that
         # probe in this group (a home copy probes in exactly ONE salt group).
         # (Single-sided grouping — Spark 4.1's cogroup prunes the right
         # side's columns under generator inputs, so cogroup is avoided.)
-        # The certificate is computed HERE (kth distance strictly inside the
-        # exact per-point margin to the scanned 3×3 region boundary) so the
-        # driver-side plan needs no full-size anchor join; probe coords are
-        # emitted only on uncertified rows.
         home = rows["_probe"].to_numpy(bool)
-        if not home.any():
-            return pd.DataFrame(empty)
+        pid = rows["node_id"].to_numpy()[home]
+        px = rows["x"].to_numpy()[home]
+        py = rows["y"].to_numpy()[home]
         cand = rows if self_join else rows[~home]
+        nc = len(cand)
+        kk = min(k, nc - 1 if self_join else nc)
+        if kk <= 0 or not len(pid):
+            # no probe here, or lone probes for the residual fallback
+            uncertified.add(len(pid))
+            return pd.DataFrame({"src": pid, "dst": 0, "weight": np.inf,
+                                 "cert": False, "px": px, "py": py})
         order = np.argsort(cand["node_id"].to_numpy(), kind="stable")
         cid = cand["node_id"].to_numpy()[order]
         cx = cand["x"].to_numpy()[order]
         cy = cand["y"].to_numpy()[order]
-        pid = rows["node_id"].to_numpy()[home]
-        px = rows["x"].to_numpy()[home]
-        py = rows["y"].to_numpy()[home]
-        nc = len(cid)
-        kk = min(k, nc - 1 if self_join else nc)
-        bx = np.floor(px / B)
-        by = np.floor(py / B)
-        margin = np.minimum.reduce([px - (bx - 1) * B, (bx + 2) * B - px,
-                                    py - (by - 1) * B, (by + 2) * B - py])
-        if kk <= 0:
-            # lone probes: sentinel rows route them to the residual fallback
-            return pd.DataFrame({"src": pid, "dst": np.full(len(pid), -1),
-                                 "weight": np.full(len(pid), np.inf),
-                                 "cert": np.zeros(len(pid), dtype=bool),
-                                 "px": px, "py": py})
-        frames = []
+        tops_d, tops_i = [], []
         # chunk probes so chunk×candidates stays bounded (skewed blocks)
         chunk = max(1, int(4_000_000 / nc))
         m = min(kk + 8, nc)  # argpartition margin for boundary ties
         for s in range(0, len(pid), chunk):
             cpid, cpx, cpy = pid[s:s + chunk], px[s:s + chunk], py[s:s + chunk]
-            cmargin = margin[s:s + chunk]
             dx = cpx[:, None] - cx[None, :]
             dy = cpy[:, None] - cy[None, :]
             if metric == "manhattan":
@@ -177,30 +165,30 @@ def _local_topk_kernel(k: int, metric: str, block_size: float,
             sel_d = np.take_along_axis(sel_d, o1, axis=1)
             sel_i = np.take_along_axis(sel_i, o1, axis=1)
             o2 = np.argsort(sel_d, axis=1, kind="stable")[:, :kk]
-            top_d = np.take_along_axis(sel_d, o2, axis=1)
-            top_i = np.take_along_axis(sel_i, o2, axis=1)
-            found = np.isfinite(top_d)
-            n_found = found.sum(axis=1)
-            kth = np.where(n_found > 0, np.max(np.where(found, top_d, -np.inf),
-                                               axis=1), np.inf)
-            cert = (n_found == k) & (kth < cmargin)
-            rows_src = np.repeat(cpid, kk).reshape(-1, kk)
-            rows_cert = np.repeat(cert, kk).reshape(-1, kk)
-            rows_px = np.repeat(cpx, kk).reshape(-1, kk)
-            rows_py = np.repeat(cpy, kk).reshape(-1, kk)
-            frames.append(pd.DataFrame({
-                "src": rows_src[found], "dst": top_i[found],
-                "weight": top_d[found], "cert": rows_cert[found],
-                "px": rows_px[found], "py": rows_py[found]}))
-            # probes with zero finite candidates still need sentinel rows
-            lone = ~found.any(axis=1)
-            if lone.any():
-                frames.append(pd.DataFrame({
-                    "src": cpid[lone], "dst": np.full(lone.sum(), -1),
-                    "weight": np.full(lone.sum(), np.inf),
-                    "cert": np.zeros(lone.sum(), dtype=bool),
-                    "px": cpx[lone], "py": cpy[lone]}))
-        return pd.concat(frames) if frames else pd.DataFrame(empty)
+            tops_d.append(np.take_along_axis(sel_d, o2, axis=1))
+            tops_i.append(np.take_along_axis(sel_i, o2, axis=1))
+        top_d, top_i = np.concatenate(tops_d), np.concatenate(tops_i)
+        bx = np.floor(px / B)
+        by = np.floor(py / B)
+        margin = np.minimum.reduce([px - (bx - 1) * B, (bx + 2) * B - px,
+                                    py - (by - 1) * B, (by + 2) * B - py])
+        found = np.isfinite(top_d)
+        n_found = found.sum(axis=1)
+        kth = np.where(n_found > 0, np.max(np.where(found, top_d, -np.inf),
+                                           axis=1), np.inf)
+        cert = (n_found == k) & (kth < margin)
+        unc = ~cert
+        n_unc, n_edge = int(unc.sum()), int(cert.sum()) * kk
+        uncertified.add(n_unc)
+        # one frame per group: its construction is a fixed per-group cost
+        pad = np.full(n_edge, np.nan)
+        return pd.DataFrame({
+            "src": np.concatenate([np.repeat(pid[cert], kk), pid[unc]]),
+            "dst": np.concatenate([top_i[cert].ravel(), n_found[unc]]),
+            "weight": np.concatenate([top_d[cert].ravel(), kth[unc]]),
+            "cert": np.arange(n_edge + n_unc) < n_edge,
+            "px": np.concatenate([pad, px[unc]]),
+            "py": np.concatenate([pad, py[unc]])})
 
     return kernel
 
@@ -233,28 +221,25 @@ def _knn_edges(pts: DataFrame, dst_pts: DataFrame | None, k: int,
     """Exact directed kNN edges (src, dst, weight) with superblock size
     ``B``: each ``pts`` row → its k nearest ``dst_pts`` rows, or, with
     ``dst_pts=None``, its k nearest other ``pts`` rows (self excluded by
-    id).  Ties break by (distance, dst)."""
+    id).  Ties break by (distance, dst).
+
+    The phase-1 kernel runs once, into an eager ``localCheckpoint``: not
+    matched by plan (a repeat call computes from scratch) and freed by
+    Spark's ContextCleaner once the result is dropped.  The kernel counts
+    its uncertified probes in a per-call accumulator, read after the
+    checkpoint has run; when it is 0 the certified edges are the result
+    and the phase-2/residual plan is never built.  (A retried kernel task
+    can only over-count, which builds that exact plan needlessly.)"""
     self_join = dst_pts is None
     src = with_cell(pts, cell_size=B)
     dst = src if self_join else with_cell(dst_pts, cell_size=B)
-    build = dst.select(
-        F.col("node_id").alias("dst"), F.col("x").alias("bx"),
-        F.col("y").alias("by"), F.col("cell").alias("bcell"))
-
-    def rank_topk(cand: DataFrame) -> DataFrame:
-        if self_join:
-            cand = cand.where(F.col("src") != F.col("dst"))
-        w = Window.partitionBy("src").orderBy(F.col("weight").asc(), F.col("dst").asc())
-        return (cand.withColumn("_rn", F.row_number().over(w))
-                    .where(F.col("_rn") <= k).drop("_rn"))
 
     # ---- phase 1: per-superblock local kNN (grouped pandas kernel) -----
     # Every candidate is exploded to the 9 blocks it can serve; a probe is
     # the home-cell copy (self-join) or the src row itself (two layers).
-    # The kernel computes the exactness certificate per probe
-    # (kth < margin-to-scanned-region) and emits sentinel weight=inf rows
-    # for candidate-less probes, so the driver-side plan never joins
-    # against the full point set.
+    # The kernel certifies each probe (kth < margin-to-scanned-region) and
+    # returns one stats row per uncertified probe in place of its edges, so
+    # the plan never joins against the full point set.
     cands = explode_ring(dst, ring=1, cx="cell_cx", cy="cell_cy", out="qcell") \
         .select("node_id", "x", "y", "cell", "qcell")
     # urban-core skew guard: a superblock with more than ``salt_target``
@@ -294,22 +279,30 @@ def _knn_edges(pts: DataFrame, dst_pts: DataFrame | None, k: int,
                   .withColumn("_probe", F.lit(True)))
         cands = (cands.withColumn("_probe", F.lit(False)).select(*cols)
                  .unionByName(probes.select(*cols)))
-    top1 = _persist(
-        _kernel_exchange(cands, "qcell", "_salt")
-        .groupBy("qcell", "_salt")
-        .applyInPandas(_local_topk_kernel(k, metric, B, self_join),
-                       "src long, dst long, weight double, cert boolean, "
-                       "px double, py double"))
-    top_certified = top1.where(F.col("cert"))
+    uncertified = pts.sparkSession.sparkContext.accumulator(0)
+    top1 = (_kernel_exchange(cands, "qcell", "_salt")
+            .groupBy("qcell", "_salt")
+            .applyInPandas(
+                _local_topk_kernel(k, metric, B, self_join, uncertified),
+                "src long, dst long, weight double, cert boolean, "
+                "px double, py double")
+            .localCheckpoint())
+    edges = top1.where(F.col("cert")).select("src", "dst", "weight")
+    if not uncertified.value:
+        return edges
+    stats1 = top1.where(~F.col("cert")).select(
+        "src", "px", "py", F.col("dst").alias("_cnt"),
+        F.col("weight").alias("_kth"))
+    build = dst.select(
+        F.col("node_id").alias("dst"), F.col("x").alias("bx"),
+        F.col("y").alias("by"), F.col("cell").alias("bcell"))
 
-    # Only the (rare) uncertified probes need driver-side stats.
-    found = F.col("weight") < F.lit(float("inf"))
-    stats1 = _persist(
-        top1.where(~F.col("cert"))
-        .groupBy("src")
-        .agg(F.max(F.when(found, F.col("weight"))).alias("_kth"),
-             F.sum(F.when(found, 1).otherwise(0)).alias("_cnt"),
-             F.first("px").alias("px"), F.first("py").alias("py")))
+    def rank_topk(cand: DataFrame) -> DataFrame:
+        if self_join:
+            cand = cand.where(F.col("src") != F.col("dst"))
+        w = Window.partitionBy("src").orderBy(F.col("weight").asc(), F.col("dst").asc())
+        return (cand.withColumn("_rn", F.row_number().over(w))
+                    .where(F.col("_rn") <= k).drop("_rn"))
 
     # ---- phase 2: boundary exchange for uncertified probes -----------
     # Probes that found k candidates but too far: every true neighbor lies
@@ -333,8 +326,7 @@ def _knn_edges(pts: DataFrame, dst_pts: DataFrame | None, k: int,
                                          F.col("py") - F.col("by"))))
     top3 = rank_topk(cand3.select("src", "dst", "weight"))
 
-    return (top_certified.select("src", "dst", "weight")
-            .unionByName(top2.select("src", "dst", "weight"))
+    return (edges.unionByName(top2.select("src", "dst", "weight"))
             .unionByName(top3.select("src", "dst", "weight")))
 
 
@@ -352,10 +344,11 @@ def knn_graph(points: DataFrame, k: int, *, cell_size: float,
     Strategy: ``cell_size`` is the *superblock* size.  Phase 1 computes each
     block's probes against its 3×3-halo candidates with a vectorized numpy
     kernel inside a grouped ``applyInPandas`` (pairs never materialise in
-    the shuffle — only k edges per probe come back).  Phase 2 re-probes the
-    per-point certificate failures with a variable-radius cell join; a
-    residual broadcast fallback handles probes with fewer than k candidates
-    anywhere in the halo.  Exact at every phase.
+    the shuffle — only k edges per certified probe, or one stats row per
+    uncertified probe, come back), checkpointed once.  Only when some probe
+    is uncertified does phase 2 re-probe those with a variable-radius cell
+    join, and a residual broadcast fallback handle probes with fewer than k
+    candidates anywhere in the halo.  Exact at every phase.
 
     Returns (src, dst, weight).
     """
@@ -416,9 +409,7 @@ def _radius_candidates(points: DataFrame, r_cand: float) -> DataFrame:
                 + (F.col("uy") - F.col("vy")) * (F.col("uy") - F.col("vy"))))
             .where(F.col("dist") <= F.lit(float(r_cand)))
             .select("u", "v", "ux", "uy", "vx", "vy", "dist")
-            .dropDuplicates(["u", "v"])
-            # consumed twice (witness probe + final anti-join)
-            .transform(_persist))
+            .dropDuplicates(["u", "v"]))
 
 
 def _empty_graph_kernel(r_cand: float, block: float, mode: str):

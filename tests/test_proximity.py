@@ -220,3 +220,96 @@ def test_duplicate_edges_option(spark):
                   duplicate_edges=True)
     with pytest.raises(ValueError, match="duplicate_edges"):
         fixed_radius_graph(pts, 1.5, directed=True, duplicate_edges=True)
+
+
+class _Count:
+    """Stand-in for the Spark accumulator the kNN kernel adds to."""
+
+    def __init__(self):
+        self.value = 0
+
+    def add(self, n):
+        self.value += n
+
+
+@pytest.mark.parametrize("self_join", [True, False])
+def test_local_topk_kernel_rows(self_join):
+    """The phase-1 kernel in plain pandas: k edge rows per certified probe,
+    one stats row (found count in dst, kth distance in weight) per
+    uncertified probe, and the uncertified probes counted."""
+    import pandas as pd
+    from city2graph_spark.operators.proximity import _local_topk_kernel
+    k, B = 2, 10.0
+    # the cluster certifies (kth ≪ margin ≥ B); (9.5, 9.5) finds its k
+    # nearest ~11 away, past its 10.5 margin; (25, 25) is a halo row
+    probe_xy = np.array([[1.0, 1.0], [1.5, 1.0], [1.0, 1.5], [2.0, 2.0],
+                         [9.5, 9.5]])
+    halo_xy = np.array([[25.0, 25.0]])
+    if self_join:
+        xy = np.vstack([probe_xy, halo_xy])
+        ids = np.arange(6) - 3
+        is_probe = np.arange(6) < 5
+    else:   # candidates are a second layer sharing the probes' ids
+        xy = np.vstack([probe_xy[:4], halo_xy, probe_xy])
+        ids = np.tile(np.arange(5), 2) - 3
+        is_probe = np.arange(10) >= 5
+    group = pd.DataFrame({"node_id": ids, "x": xy[:, 0], "y": xy[:, 1],
+                          "_probe": is_probe})
+    # a lone probe: nothing else in its group
+    lone = pd.DataFrame({"node_id": [99], "x": [3.0], "y": [3.0],
+                         "_probe": [True]})
+    count = _Count()
+    kernel = _local_topk_kernel(k, "euclidean", B, self_join, count)
+    out = pd.concat([kernel(group), kernel(lone)])
+
+    cand = np.ones(len(xy), bool) if self_join else ~is_probe
+    n_unc = 0
+    for i in np.nonzero(is_probe)[0]:
+        dx, dy = xy[i, 0] - xy[cand, 0], xy[i, 1] - xy[cand, 1]
+        d, cid = np.sqrt(dx * dx + dy * dy), ids[cand]
+        if self_join:
+            d, cid = d[cid != ids[i]], cid[cid != ids[i]]
+        top = np.lexsort((cid, d))[:k]
+        bx, by = np.floor(xy[i] / B)
+        margin = min(xy[i, 0] - (bx - 1) * B, (bx + 2) * B - xy[i, 0],
+                     xy[i, 1] - (by - 1) * B, (by + 2) * B - xy[i, 1])
+        got = out[out["src"] == ids[i]]
+        if len(top) == k and d[top].max() < margin:
+            assert got["cert"].all() and len(got) == k
+            assert list(got["dst"]) == list(cid[top])
+            assert np.array_equal(got["weight"].to_numpy(), d[top])
+        else:
+            n_unc += 1
+            assert len(got) == 1 and not got["cert"].iloc[0]
+            assert got["dst"].iloc[0] == len(top)
+            assert got["weight"].iloc[0] == d[top].max()
+            assert (got["px"].iloc[0], got["py"].iloc[0]) == tuple(xy[i])
+    assert 0 < n_unc < len(probe_xy)
+    stats = out[out["src"] == 99]
+    assert len(stats) == 1 and stats["dst"].iloc[0] == 0
+    assert stats["weight"].iloc[0] == np.inf and not stats["cert"].iloc[0]
+    assert count.value == n_unc + 1 == int((~out["cert"]).sum())
+
+
+def test_proximity_leaves_no_cached_plan(spark, pts_np):
+    """Once its result is collected an operator leaves no cached plan:
+    knn on the certified, phase-2 (cell 40) and residual (cell 6000)
+    paths, bipartite kNN, bounded Gabriel and Waxman.  (The session is
+    shared, so other tests' cached fixtures are counted out.)"""
+    from city2graph_spark.operators.bipartite import knn_graph_bipartite
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def cached_plans():
+        return 0 if cm.isEmpty() else cm.cachedData().size()
+
+    pts = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in enumerate(pts_np)],
+        "node_id long, x double, y double")
+    before = cached_plans()
+    for cell in (400.0, 40.0, 6000.0):
+        knn_graph(pts, 5, cell_size=cell).collect()
+    knn_graph_bipartite(pts.where("node_id < 50"), pts.where("node_id >= 50"),
+                        3, cell_size=400.0).collect()
+    gabriel_graph(pts, r_cand=800.0).collect()
+    waxman_graph(pts, 0.6, 300.0, seed=7).collect()
+    assert cached_plans() == before
