@@ -8,9 +8,8 @@ id (expanded by a halo ring whose width covers the query radius), then refine
 with the exact predicate.  All of it is plain column arithmetic — JVM-side,
 whole-stage-codegen'd, no Python in the hot path.
 
-Cell ids are ``(cx, cy)`` packed into one long plus a Z-order (Morton) code
-used as the *partition / sort key* so that parquet/Iceberg writes are
-spatially clustered and partition pruning works on bounding boxes at 100 TB.
+Cell ids are ``(cx, cy)`` packed into one long (``pack_cell``), the
+equi-join and partition key.
 
 At 10^12 docs, skewed cells (urban cores) are handled by AQE skew-join plus
 the explicit salting helpers here (``with_salt`` / ``explode_salt``).
@@ -37,21 +36,6 @@ def cell_coord(coord: Column, cell_size: float) -> Column:
 def pack_cell(cx: Column, cy: Column) -> Column:
     """Pack (cx, cy) into a single long equi-join key."""
     return (cx * F.lit(CELL_SHIFT) + cy).cast("long")
-
-
-def morton(cx: Column, cy: Column, bits: int = CELL_AXIS_BITS) -> Column:
-    """Z-order (Morton) interleave of two cell indices — pure bit arithmetic,
-    stays inside whole-stage codegen.  Used as a clustering/sort key so that
-    spatially-near rows land in the same file/partition (locality ⇒ partition
-    pruning on range predicates at scale)."""
-    code = F.lit(0).cast("long")
-    for b in range(bits):
-        code = (
-            code
-            | F.shiftleft(F.shiftright(cx, b).bitwiseAND(F.lit(1)), 2 * b + 1)
-            | F.shiftleft(F.shiftright(cy, b).bitwiseAND(F.lit(1)), 2 * b)
-        )
-    return code
 
 
 def with_cell(df: DataFrame, x: str = "x", y: str = "y", *,

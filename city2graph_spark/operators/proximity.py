@@ -392,27 +392,7 @@ def fixed_radius_graph(points: DataFrame, radius: float, *,
     return out if directed else _apply_duplicate_edges(out, duplicate_edges)
 
 
-def _radius_candidates(points: DataFrame, r_cand: float) -> DataFrame:
-    """Canonical (u<v) candidate pairs within r_cand, with both coordinate
-    pairs kept — shared candidate set for Gabriel/RNG (mirrors the
-    reference's Delaunay pruning, proximity.py:1061-1069)."""
-    pts = with_cell(points, cell_size=r_cand)
-    build = pts.select(F.col("node_id").alias("v"), F.col("x").alias("vx"),
-                       F.col("y").alias("vy"), F.col("cell").alias("bcell"))
-    probe = explode_ring(pts, ring=1).select(
-        F.col("node_id").alias("u"), F.col("x").alias("ux"),
-        F.col("y").alias("uy"), "qcell")
-    return (probe.join(build, probe.qcell == build.bcell)
-            .where(F.col("u") < F.col("v"))
-            .withColumn("dist", F.sqrt(
-                (F.col("ux") - F.col("vx")) * (F.col("ux") - F.col("vx"))
-                + (F.col("uy") - F.col("vy")) * (F.col("uy") - F.col("vy"))))
-            .where(F.col("dist") <= F.lit(float(r_cand)))
-            .select("u", "v", "ux", "uy", "vx", "vy", "dist")
-            .dropDuplicates(["u", "v"]))
-
-
-def _empty_graph_kernel(r_cand: float, block: float, mode: str):
+def _empty_graph_kernel(r_cand: float, mode: str):
     """Per-superblock kernel computing radius-bounded empty-region graphs
     (Gabriel: empty diametral disc; RNG: Gabriel test + empty lune — the
     reference's exact predicate chain, proximity.py:1071-1078 / 1171-1181).
@@ -420,10 +400,11 @@ def _empty_graph_kernel(r_cand: float, block: float, mode: str):
     Exactness: with r_cand ≤ block size, every candidate edge's disc/lune
     lies inside the 3×3 halo of the home block, so the local witness set is
     complete — no phase 2 needed.  Candidate distances use the same
-    dx·dx+dy·dy → sqrt expression tree as the oracle; the witness dot/dist²
-    tests run as BLAS matmuls (c_e − A_e·Wᵀ + s_w), which differs from the
-    reference's expression only at measure-zero boundary configurations;
-    endpoint self-hits are masked by id, never by the rounded dot.
+    dx·dx+dy·dy → sqrt expression tree as the oracle.  Witness tests run
+    as float32 GEMMs that decide only outside a bounded error band; band
+    edges re-run the oracle's own float64 expressions, so the edge set is
+    the oracle's.  Endpoint self-hits are masked by id, never by the
+    rounded dot.
     """
     import numpy as np
     import pandas as pd
@@ -479,7 +460,6 @@ def _empty_graph_kernel(r_cand: float, block: float, mode: str):
         worder = np.argsort(wkey, kind="stable")
         wkey_s = wkey[worder]
         Ws = W[worder]
-        s_w = Ws[:, 0] * Ws[:, 0] + Ws[:, 1] * Ws[:, 1]
         inv = np.empty(nc, dtype=np.int64)  # witness-array idx → sorted idx
         inv[worder] = np.arange(nc)
 
@@ -499,80 +479,47 @@ def _empty_graph_kernel(r_cand: float, block: float, mode: str):
             dij2 = d_s * d_s
             thr_all = dij2 - _EPS64 * 64.0 * np.maximum(dij2, 1.0)
 
-        def mask_endpoints(M, sel, widx, which):
-            """+inf the columns holding each edge's own endpoints (by id
-            position — never by the rounded dot value)."""
+        def mask_endpoints(M, sel, widx, which, value=np.inf):
+            """Set to ``value`` the columns holding each edge's own
+            endpoints (by id position — never by the rounded dot value)."""
             epos = np.searchsorted(widx, inv[which[sel]])
             in_ring = epos < len(widx)
             epos_c = np.clip(epos, 0, max(len(widx) - 1, 0))
             hit = in_ring & (widx[epos_c] == inv[which[sel]])
-            M[np.nonzero(hit)[0], epos_c[hit]] = np.inf
+            M[np.nonzero(hit)[0], epos_c[hit]] = value
+
+        def exact(bsel, widx):
+            """The gate oracle's predicates in float64, term for term:
+            disc (ux−wx)(vx−wx)+(uy−wy)(vy−wy) < 0, and for RNG the lune
+            du² < thr ∧ dv² < thr."""
+            ux, uy = W[iu_s[bsel], 0][:, None], W[iu_s[bsel], 1][:, None]
+            vx, vy = W[iv_s[bsel], 0][:, None], W[iv_s[bsel], 1][:, None]
+            wx, wy = Ws[widx, 0][None, :], Ws[widx, 1][None, :]
+            hit = (ux - wx) * (vx - wx) + (uy - wy) * (vy - wy) < 0
+            if mode == "rng":
+                thr = thr_all[bsel][:, None]
+                hit |= (((ux - wx) * (ux - wx) + (uy - wy) * (uy - wy) < thr)
+                        & ((vx - wx) * (vx - wx) + (vy - wy) * (vy - wy) < thr))
+            mask_endpoints(hit, bsel, widx, iu_s, False)
+            mask_endpoints(hit, bsel, widx, iv_s, False)
+            return hit.any(axis=1)
 
         def violated(sel, widx):
             """Edges (indices into the sorted arrays) killed by any witness
-            in widx.  Disc test as ONE fused GEMM: G = (−(U+V) | 1)·(Wᵀ ;
-            s_w) ⇒ dot(e,w) = G[e,w] + c_e[e]; the m×c matrix is written
-            once by BLAS and read once by the min-reduce.
-
-            Gabriel fast path: the dot test is shift-invariant, so in
-            witness-centroid-shifted coordinates the magnitudes are block-
-            sized and a FLOAT32 GEMM (half the memory traffic of the
-            bandwidth-bound hot loop) decides everything outside a
-            rigorously-bounded error band; band rows re-run in float64.
-            """
+            in widx.  The disc test is shift-invariant, so it runs as ONE
+            fused FLOAT32 GEMM in witness-centroid-shifted coordinates
+            (block-sized magnitudes, half the memory traffic of the
+            bandwidth-bound hot loop): G = (−(U+V) | 1)·(Wᵀ ; |W|²) ⇒
+            dot(e,w) = G[e,w] + c_e[e].  RNG adds the two lune distance
+            matrices from the same shifted witnesses.  Each float32 result
+            decides only outside a rigorously bounded error band; edges
+            inside any band re-run :func:`exact`, so the output equals the
+            oracle's — cocircular witnesses (dot exactly 0) included."""
             if len(sel) == 0 or len(widx) == 0:
                 return np.zeros(len(sel), dtype=bool)
-            Ue, Ve = W[iu_s[sel]], W[iv_s[sel]]
-            if mode == "gabriel":
-                c0 = Ws[widx].mean(axis=0)
-                Ues = Ue - c0
-                Ves = Ve - c0
-                Wsx = Ws[widx] - c0
-                c_es = Ues[:, 0] * Ves[:, 0] + Ues[:, 1] * Ves[:, 1]
-                X = np.empty((len(sel), 3), dtype=np.float32)
-                X[:, 0] = -(Ues[:, 0] + Ves[:, 0])
-                X[:, 1] = -(Ues[:, 1] + Ves[:, 1])
-                X[:, 2] = 1.0
-                Y = np.empty((3, len(widx)), dtype=np.float32)
-                Y[0] = Wsx[:, 0]
-                Y[1] = Wsx[:, 1]
-                Y[2] = Wsx[:, 0] * Wsx[:, 0] + Wsx[:, 1] * Wsx[:, 1]
-                G32 = X @ Y
-                mask_endpoints(G32, sel, widx, iu_s)
-                mask_endpoints(G32, sel, widx, iv_s)
-                m32 = G32.min(axis=1).astype(np.float64)
-                gx = float(np.abs(X).max())
-                gy = float(np.abs(Y).max())
-                gamma = 32.0 * 5.96e-8 * gx * gy
-                bad = m32 < (-c_es - gamma)
-                band = (~bad) & (m32 <= -c_es + gamma)
-                if band.any():
-                    bsel = sel[band]
-                    Ueb, Veb = W[iu_s[bsel]] - c0, W[iv_s[bsel]] - c0
-                    c_eb = Ueb[:, 0] * Veb[:, 0] + Ueb[:, 1] * Veb[:, 1]
-                    Xb = np.empty((len(bsel), 3))
-                    Xb[:, 0] = -(Ueb[:, 0] + Veb[:, 0])
-                    Xb[:, 1] = -(Ueb[:, 1] + Veb[:, 1])
-                    Xb[:, 2] = 1.0
-                    Yb = np.empty((3, len(widx)))
-                    Yb[0] = Wsx[:, 0]
-                    Yb[1] = Wsx[:, 1]
-                    Yb[2] = Wsx[:, 0] * Wsx[:, 0] + Wsx[:, 1] * Wsx[:, 1]
-                    Gb = Xb @ Yb
-                    mask_endpoints(Gb, bsel, widx, iu_s)
-                    mask_endpoints(Gb, bsel, widx, iv_s)
-                    bad[band] = Gb.min(axis=1) < -c_eb
-                return bad
-            # ---- RNG fast path (round 5, VERDICT r4 Next #8): the same
-            # centroid-shifted FLOAT32 GEMMs that decide the Gabriel disc
-            # now decide the lune too — disc + both lune distance matrices
-            # in f32 (half the memory traffic of the bandwidth-bound hot
-            # loop), with rigorously bounded error bands; edges inside any
-            # band re-run the ORIGINAL unshifted float64 expressions, so
-            # the output is bit-identical to the pure-f64 kernel.
             c0 = Ws[widx].mean(axis=0)
-            Ues = Ue - c0
-            Ves = Ve - c0
+            Ues = W[iu_s[sel]] - c0
+            Ves = W[iv_s[sel]] - c0
             Wsx = Ws[widx] - c0
             Y32 = np.empty((3, len(widx)), dtype=np.float32)
             Y32[0] = Wsx[:, 0]
@@ -588,63 +535,33 @@ def _empty_graph_kernel(r_cand: float, block: float, mode: str):
             mask_endpoints(G32, sel, widx, iu_s)
             mask_endpoints(G32, sel, widx, iv_s)
             m32 = G32.min(axis=1).astype(np.float64)
-            gamma_g = 32.0 * 5.96e-8 * float(np.abs(X32).max()) * gy
-            disc_bad = m32 < (-c_es - gamma_g)
-            disc_band = (~disc_bad) & (m32 <= -c_es + gamma_g)
-
-            thr = thr_all[sel]
-            Xu32 = np.empty((len(sel), 3), dtype=np.float32)
-            Xu32[:, 0] = -2.0 * Ues[:, 0]
-            Xu32[:, 1] = -2.0 * Ues[:, 1]
-            Xu32[:, 2] = 1.0
-            gamma_u = 32.0 * 5.96e-8 * float(np.abs(Xu32).max()) * gy
-            su = Ues[:, 0] * Ues[:, 0] + Ues[:, 1] * Ues[:, 1]
-            du2 = (Xu32 @ Y32).astype(np.float64) + su[:, None]
-            Xu32[:, 0] = -2.0 * Ves[:, 0]
-            Xu32[:, 1] = -2.0 * Ves[:, 1]
-            gamma_v = 32.0 * 5.96e-8 * float(np.abs(Xu32).max()) * gy
-            sv = Ves[:, 0] * Ves[:, 0] + Ves[:, 1] * Ves[:, 1]
-            dv2 = (Xu32 @ Y32).astype(np.float64) + sv[:, None]
-            mask_endpoints(du2, sel, widx, iu_s)
-            mask_endpoints(du2, sel, widx, iv_s)
-            lune_kill = ((du2 < thr[:, None] - gamma_u)
-                         & (dv2 < thr[:, None] - gamma_v)).any(axis=1)
-            lune_loose = ((du2 < thr[:, None] + gamma_u)
-                          & (dv2 < thr[:, None] + gamma_v)).any(axis=1)
-            bad = disc_bad | lune_kill
-            band = (~bad) & (disc_band | lune_loose)
+            gamma = 32.0 * 5.96e-8 * float(np.abs(X32).max()) * gy
+            bad = m32 < (-c_es - gamma)
+            band = (~bad) & (m32 <= -c_es + gamma)
+            if mode == "rng":
+                thr = thr_all[sel]
+                Xu32 = np.empty((len(sel), 3), dtype=np.float32)
+                Xu32[:, 0] = -2.0 * Ues[:, 0]
+                Xu32[:, 1] = -2.0 * Ues[:, 1]
+                Xu32[:, 2] = 1.0
+                gamma_u = 32.0 * 5.96e-8 * float(np.abs(Xu32).max()) * gy
+                su = Ues[:, 0] * Ues[:, 0] + Ues[:, 1] * Ues[:, 1]
+                du2 = (Xu32 @ Y32).astype(np.float64) + su[:, None]
+                Xu32[:, 0] = -2.0 * Ves[:, 0]
+                Xu32[:, 1] = -2.0 * Ves[:, 1]
+                gamma_v = 32.0 * 5.96e-8 * float(np.abs(Xu32).max()) * gy
+                sv = Ves[:, 0] * Ves[:, 0] + Ves[:, 1] * Ves[:, 1]
+                dv2 = (Xu32 @ Y32).astype(np.float64) + sv[:, None]
+                mask_endpoints(du2, sel, widx, iu_s)
+                mask_endpoints(du2, sel, widx, iv_s)
+                lune_kill = ((du2 < thr[:, None] - gamma_u)
+                             & (dv2 < thr[:, None] - gamma_v)).any(axis=1)
+                lune_loose = ((du2 < thr[:, None] + gamma_u)
+                              & (dv2 < thr[:, None] + gamma_v)).any(axis=1)
+                bad |= lune_kill
+                band = (~bad) & (band | lune_loose)
             if band.any():
-                bsel = sel[band]
-                Ueb, Veb = W[iu_s[bsel]], W[iv_s[bsel]]
-                c_eb = Ueb[:, 0] * Veb[:, 0] + Ueb[:, 1] * Veb[:, 1]
-                Xb = np.empty((len(bsel), 3))
-                Xb[:, 0] = -(Ueb[:, 0] + Veb[:, 0])
-                Xb[:, 1] = -(Ueb[:, 1] + Veb[:, 1])
-                Xb[:, 2] = 1.0
-                Yb = np.empty((3, len(widx)))
-                Yb[0] = Ws[widx, 0]
-                Yb[1] = Ws[widx, 1]
-                Yb[2] = s_w[widx]
-                Gb = Xb @ Yb
-                mask_endpoints(Gb, bsel, widx, iu_s)
-                mask_endpoints(Gb, bsel, widx, iv_s)
-                bbad = Gb.min(axis=1) < -c_eb
-                thr_b = thr_all[bsel]
-                Xub = np.empty((len(bsel), 3))
-                Xub[:, 0] = -2.0 * Ueb[:, 0]
-                Xub[:, 1] = -2.0 * Ueb[:, 1]
-                Xub[:, 2] = 1.0
-                du2b = Xub @ Yb + (Ueb[:, 0] * Ueb[:, 0]
-                                   + Ueb[:, 1] * Ueb[:, 1])[:, None]
-                Xub[:, 0] = -2.0 * Veb[:, 0]
-                Xub[:, 1] = -2.0 * Veb[:, 1]
-                dv2b = Xub @ Yb + (Veb[:, 0] * Veb[:, 0]
-                                   + Veb[:, 1] * Veb[:, 1])[:, None]
-                mask_endpoints(du2b, bsel, widx, iu_s)
-                mask_endpoints(du2b, bsel, widx, iv_s)
-                bbad |= ((du2b < thr_b[:, None])
-                         & (dv2b < thr_b[:, None])).any(axis=1)
-                bad[band] = bbad
+                bad[band] = exact(sel[band], widx)
             return bad
 
         offs = [dxo * K + dyo for dxo in range(-ring, ring + 1)
@@ -695,7 +612,7 @@ def _empty_region_graph(points: DataFrame, r_cand: float,
     # SLOWER end-to-end at the bench shape despite shipping 2.25× fewer
     # rows; the interleaved A/B is recorded in OPTIMIZATION_r07.md.)
     return (_kernel_exchange(cands, "qcell").groupBy("qcell")
-            .applyInPandas(_empty_graph_kernel(float(r_cand), B, mode),
+            .applyInPandas(_empty_graph_kernel(float(r_cand), mode),
                            "u long, v long, weight double"))
 
 
@@ -808,11 +725,13 @@ def waxman_graph(points: DataFrame, beta: float, r0: float, seed: int, *,
     order-independent, and shuffle-safe.  Pairs with P < p_min are pruned
     by a distance cutoff d_max = −r0·ln(p_min/β) before the draw — the
     documented deviation that makes the operator O(n·density) instead of
-    O(n²)."""
+    O(n²).  The candidates are :func:`fixed_radius_graph` at d_max."""
     if p_min >= beta:
         raise ValueError("p_min must be < beta")
     d_max = -r0 * math.log(p_min / beta)
-    cand = _radius_candidates(points, d_max)
+    cand = fixed_radius_graph(points, d_max).select(
+        F.col("src").alias("u"), F.col("dst").alias("v"),
+        F.col("weight").alias("dist"))
     # 60-bit md5-derived uniform in [0,1): portable across engines.
     draw = (F.conv(F.substring(F.md5(F.concat_ws("_", F.lit(seed), F.col("u"),
                                                  F.col("v"))), 1, 15), 16, 10)
@@ -835,6 +754,10 @@ def delaunay_graph(points: DataFrame, *, driver_switch: int = 20_000,
     single-process scipy call); beyond it the per-tile certified distributed
     path (``delaunay_graph_distributed``) takes over — the round-1 hard cap
     is gone.
+
+    Both paths stay: on a 4-core host (local[4], uniform points, 2 reps)
+    the driver path took 5.2–5.6 s at 3k points and 17.6–18.7 s at 8k,
+    the distributed path 27.6–46.4 s and 29.8–30.9 s, with identical edges.
     """
     n = points.count()
     out = (delaunay_graph_distributed(points, tile_points=tile_points)
@@ -862,34 +785,6 @@ def _delaunay_driver(points: DataFrame) -> DataFrame:
     return df.where(F.col("u").isNotNull()) \
         .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"),
                 "weight")
-
-
-def _global_hull(points: DataFrame) -> list[tuple[int, float, float]]:
-    """Global convex hull (collinear-inclusive, CCW) as [(node_id, x, y)]:
-    per-partition monotone chains → driver merge.  A point on the global
-    hull boundary is on the boundary of every subset containing it, so the
-    per-partition candidates are complete; hulls are O(√n)-tiny."""
-    import numpy as np
-
-    from ..geo.delaunay import hull_chain
-
-    def part(it):
-        import pandas as pd
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            P = pdf[["x", "y"]].to_numpy(dtype=np.float64)
-            h = hull_chain(P)
-            yield pdf.iloc[h][["node_id", "x", "y"]]
-
-    cand = points.select("node_id", "x", "y") \
-        .mapInPandas(part, "node_id long, x double, y double").collect()
-    if not cand:
-        return []
-    ids = np.array([r["node_id"] for r in cand], dtype=np.int64)
-    P = np.array([[r["x"], r["y"]] for r in cand])
-    h = hull_chain(P)
-    return [(int(ids[i]), float(P[i, 0]), float(P[i, 1])) for i in h]
 
 
 def delaunay_graph_distributed(points: DataFrame, *, tile_points: int = 2500,
@@ -1160,7 +1055,11 @@ def euclidean_minimum_spanning_tree(points: DataFrame, *,
     O(n α(n)) Kruskal union-find runs in one pass at the driver; beyond it
     both the Delaunay candidates and the spanning forest are fully
     distributed (per-tile certified Delaunay → DataFrame Borůvka,
-    ``topology.minimum_spanning_forest``) — the round-1 cap is gone."""
+    ``topology.minimum_spanning_forest``) — the round-1 cap is gone.
+
+    Both paths stay: on a 4-core host (local[4], uniform points) Kruskal
+    took 5.2–8.4 s at 3k points and 16.9 s at 8k; Borůvka took 39.5–49.7 s
+    at 1k, and at 3k its driver ran out of heap (ROADMAP item 1)."""
     n = points.count()
     if n > driver_switch:
         from .topology import minimum_spanning_forest

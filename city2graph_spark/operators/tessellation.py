@@ -97,7 +97,9 @@ def morphological_tessellation(building_verts: DataFrame, *,
     Dispatch: up to ``driver_switch`` buildings the gathered mirror-trick
     Voronoi runs at the driver (test/street scale); beyond it the tiled
     certified path (:func:`morphological_tessellation_distributed`) takes
-    over — the round-2 driver gather is gone."""
+    over — the round-2 driver gather is gone.  The driver path stays: it
+    is the reference the tiled path is tested against
+    (``test_distributed_matches_driver``)."""
     n_b = building_verts.select("poly_id").dropDuplicates().count()
     if n_b > driver_switch:
         return morphological_tessellation_distributed(
@@ -346,15 +348,6 @@ def morphological_tessellation_distributed(building_verts: DataFrame, *,
 # --------------------------------------------------------------------------
 # Enclosed (barrier) tessellation — the reference's default M5 path
 # --------------------------------------------------------------------------
-
-def _rep_point(ring: np.ndarray) -> tuple[float, float]:
-    """A point strictly inside a simple ring (see
-    :func:`geo.kernels.ring_rep_point` — shared with the multipart ring
-    classifier; degenerate/sliver faces fall back to the vertex mean
-    rather than aborting the enclosure build)."""
-    from ..geo.kernels import ring_rep_point
-    return ring_rep_point(ring)
-
 
 def arc_rounded_rect(x0: float, y0: float, x1: float, y1: float,
                      b: float, k: int) -> np.ndarray:

@@ -3,12 +3,15 @@ MinHash+LSH, SimHash, n-gram Jaccard.
 
 DataFrame-API twins of the dual-dialect SQL in ``gate.py`` (the gate proves
 engine-equivalence against DuckDB; these are the library surface).  Hashing
-is md5-derived everywhere so results are deterministic and engine-portable.
+is md5-derived so results are deterministic and engine-portable, except for
+the MinHash signatures of ``minhash_lsh_pairs``: a fused SplitMix64 kernel.
+Its md5 twin ``minhash_lsh_pairs_md5`` runs the same band join over md5
+signatures, and is the one the gate SQL certifies.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -74,9 +77,9 @@ def minhash_signatures(docs: DataFrame, *, n_hashes: int = 8,
     strong mixer), and per-doc minima come from one
     ``np.minimum.reduceat`` — min over the window multiset equals min over
     the shingle SET, so deduplication is unnecessary.  Output rows = one
-    per doc; the downstream band join is unchanged.  The groupBy-aggregate
-    twin survives as :func:`minhash_signatures_agg` (plan comparison), the
-    md5 twin as the gate oracle."""
+    per doc; the downstream band join is unchanged.  The md5 twin
+    :func:`minhash_signatures_md5` is the one the gate oracle
+    certifies; both feed the same band join."""
     if n_hashes > len(_MH_MIX):
         raise ValueError(f"n_hashes <= {len(_MH_MIX)}")
     n = int(shingle_n)
@@ -138,20 +141,6 @@ def minhash_signatures(docs: DataFrame, *, n_hashes: int = 8,
         .mapInPandas(batches, f"{id_col} long, sig array<long>")
 
 
-def minhash_signatures_agg(docs: DataFrame, *, n_hashes: int = 8,
-                           shingle_n: int = 4) -> DataFrame:
-    """xxhash64 one-pass groupBy variant (round-2 fast path, kept for plan
-    comparison): n min-aggregates over seeded xxhash64, map-side partial
-    aggregation ⇒ shuffle one row per doc."""
-    sh = shingles(docs, n=shingle_n)
-    mins = [F.min(F.xxhash64(F.col("shingle"), F.lit(j))).alias(f"_h{j}")
-            for j in range(n_hashes)]
-    wide = sh.groupBy("doc_id").agg(*mins)
-    return wide.select(
-        "doc_id",
-        F.array(*[F.col(f"_h{j}") for j in range(n_hashes)]).alias("sig"))
-
-
 def minhash_lsh_pairs(docs: DataFrame, *, n_hashes: int = 8, band_rows: int = 2,
                       shingle_n: int = 4) -> DataFrame:
     """LSH candidate pairs: docs sharing any full band of minhashes.
@@ -169,7 +158,15 @@ def minhash_lsh_pairs(docs: DataFrame, *, n_hashes: int = 8, band_rows: int = 2,
     output-sized dropDuplicates exchange+aggregate with a filter.  SMJ on
     the band key also keeps AQE's skew-join split available for hot buckets
     (near-identical corpora)."""
-    mh = minhash_signatures(docs, n_hashes=n_hashes, shingle_n=shingle_n)
+    return _lsh_band_pairs(
+        minhash_signatures(docs, n_hashes=n_hashes, shingle_n=shingle_n),
+        n_hashes=n_hashes, band_rows=band_rows)
+
+
+def _lsh_band_pairs(mh: DataFrame, *, n_hashes: int,
+                    band_rows: int) -> DataFrame:
+    """(doc_a, doc_b) pairs of a ``(doc_id, sig array<long>)`` frame that
+    share a full band — the plan :func:`minhash_lsh_pairs` describes."""
     n_bands = n_hashes // band_rows
     bands = (mh.select("doc_id", "sig", F.explode(F.array(*[
         F.struct(F.lit(b).alias("band"),
@@ -193,29 +190,24 @@ def minhash_lsh_pairs(docs: DataFrame, *, n_hashes: int = 8, band_rows: int = 2,
 
 def minhash_signatures_md5(docs: DataFrame, *, n_hashes: int = 8,
                            shingle_n: int = 4) -> DataFrame:
-    """(doc_id, j, h): md5 twin of ``minhash_signatures`` — the engine-
-    portable hash used by the DuckDB gate oracle (gate.sql_minhash_lsh)."""
+    """(doc_id, sig array<long>): md5 twin of ``minhash_signatures`` —
+    sig[j] = min over the doc's shingles of md5(j_shingle), the engine-
+    portable hash of the gate oracle (gate.sql_minhash_lsh)."""
     # NULL text: one NULL shingle, whose SQL-twin hash is NULL and never
     # joins (concat_ws would hash it as md5(j))
     sh = shingles(docs, n=shingle_n).where(F.col("shingle").isNotNull())
-    js = F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1)))
-    return (sh.withColumn("j", js)
-            .withColumn("_h", _md5int(F.concat_ws("_", F.col("j"), F.col("shingle"))))
-            .groupBy("doc_id", "j").agg(F.min("_h").alias("h")))
+    mins = [F.min(_md5int(F.concat_ws("_", F.lit(j), F.col("shingle"))))
+            for j in range(n_hashes)]
+    return sh.groupBy("doc_id").agg(F.array(*mins).alias("sig"))
 
 
 def minhash_lsh_pairs_md5(docs: DataFrame, *, n_hashes: int = 8,
                           band_rows: int = 2, shingle_n: int = 4) -> DataFrame:
-    """md5 twin of ``minhash_lsh_pairs`` (row-identical to the gate SQL)."""
-    mh = minhash_signatures_md5(docs, n_hashes=n_hashes, shingle_n=shingle_n)
-    bands = (mh.withColumn("band", F.expr(f"j DIV {band_rows}"))
-             .groupBy("doc_id", "band")
-             .agg(F.sort_array(F.collect_list(F.struct("j", "h"))).alias("sig")))
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "sig")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "sig")
-    return (a.join(b, ["band", "sig"])
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b").dropDuplicates())
+    """md5 twin of ``minhash_lsh_pairs``: the same band join over
+    :func:`minhash_signatures_md5` (row-identical to the gate SQL)."""
+    return _lsh_band_pairs(
+        minhash_signatures_md5(docs, n_hashes=n_hashes, shingle_n=shingle_n),
+        n_hashes=n_hashes, band_rows=band_rows)
 
 
 def simhash(docs: DataFrame, *, bits: int = 16, text_col: str = "text") -> DataFrame:

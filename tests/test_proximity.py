@@ -132,6 +132,55 @@ def test_rng_exact_and_hierarchy(pts_df, pts_np):
     assert rng_edges <= brute_gabriel(pts_np)  # RNG ⊆ Gabriel
 
 
+def oracle_empty_region(xy, r_cand, mode):
+    """The gate oracles' predicates (gate._gabriel_oracle / _rng_oracle),
+    term for term in float64: candidates d ≤ r_cand, killed by any witness
+    with (ux−wx)(vx−wx)+(uy−wy)(vy−wy) < 0, or for RNG one inside the lune
+    du² < thr ∧ dv² < thr."""
+    x, y = xy[:, 0], xy[:, 1]
+    edges = set()
+    for u in range(len(xy)):
+        for v in range(u + 1, len(xy)):
+            d = np.sqrt((x[u] - x[v]) * (x[u] - x[v])
+                        + (y[u] - y[v]) * (y[u] - y[v]))
+            if not d <= r_cand:
+                continue
+            bad = (x[u] - x) * (x[v] - x) + (y[u] - y) * (y[v] - y) < 0
+            if mode == "rng":
+                thr = d * d - 1.4210854715202004e-14 * max(d * d, 1.0)
+                bad |= (((x[u] - x) * (x[u] - x) + (y[u] - y) * (y[u] - y) < thr)
+                        & ((x[v] - x) * (x[v] - x) + (y[v] - y) * (y[v] - y) < thr))
+            if not bad.any():
+                edges.add((u, v))
+    return edges
+
+
+@pytest.mark.parametrize("offset,spacing", [
+    (0.0, 1.0), (1000.3, 1.0), (123456.7, 0.1), (5e5, 3.0)])
+def test_empty_region_kernel_cocircular_lattice(offset, spacing):
+    """An 8×8 lattice puts four points on every diagonal's diametral circle
+    (the disc dot is exactly 0 there): the radius-bounded kernel must keep
+    exactly the edges the gate oracle keeps, at large offsets too, where
+    the float32 error band is widest.  Pure pandas — no Spark."""
+    import pandas as pd
+
+    from city2graph_spark.operators.proximity import _empty_graph_kernel
+    g = np.arange(8) * spacing + offset
+    xy = np.array([(gx, gy) for gx in g for gy in g])
+    r_cand = 3 * spacing
+    rows = pd.DataFrame({"node_id": np.arange(len(xy), dtype=np.int64),
+                         "x": xy[:, 0], "y": xy[:, 1],
+                         "cell": np.zeros(len(xy), dtype=np.int64),
+                         "qcell": np.zeros(len(xy), dtype=np.int64)})
+    for mode, n_edges in (("gabriel", 210), ("rng", 112)):
+        out = _empty_graph_kernel(r_cand, mode)(rows)
+        got = set(zip(out["u"].tolist(), out["v"].tolist()))
+        want = oracle_empty_region(xy, r_cand, mode)
+        assert got == want and len(got) == len(out)
+        if offset == 0.0:
+            assert len(got) == n_edges
+
+
 def test_waxman_deterministic(pts_df):
     a = edge_set(waxman_graph(pts_df, 0.6, 300.0, seed=7))
     b = edge_set(waxman_graph(pts_df, 0.6, 300.0, seed=7))

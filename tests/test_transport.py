@@ -11,6 +11,7 @@ from city2graph_spark.operators.transport import (
     build_active_dates,
     frequency_multipliers,
     get_od_pairs,
+    load_gtfs,
     service_counts,
     time_to_seconds,
     travel_summary_graph,
@@ -54,6 +55,27 @@ def feed(spark):
         "stop_id string, stop_name string, stop_lat string, stop_lon string")
     return dict(calendar=cal, calendar_dates=cal_dates, trips=trips,
                 stop_times=stop_times, frequencies=freqs, stops=stops)
+
+
+def test_load_gtfs_reads_all_varchar_members(spark, tmp_path):
+    """``.txt`` wins over ``.csv``, absent members are absent from the
+    dict, and every column is a string named by the header row."""
+    (tmp_path / "stops.txt").write_text(
+        "stop_id,stop_lat,stop_lon\n007,51.5,-0.12\n8,51.6,-0.13\n")
+    (tmp_path / "stops.csv").write_text("stop_id,ignored\nX,1\n")
+    (tmp_path / "trips.csv").write_text(
+        "trip_id,route_id,service_id\nT1,R1,S1\n")
+    (tmp_path / "shapes.txt").write_text("shape_id\nSH1\n")
+    got = load_gtfs(spark, str(tmp_path))
+    assert set(got) == {"stops", "trips"}
+    stops, trips = got["stops"], got["trips"]
+    assert stops.columns == ["stop_id", "stop_lat", "stop_lon"]
+    assert trips.columns == ["trip_id", "route_id", "service_id"]
+    for df in (stops, trips):
+        assert {t for _, t in df.dtypes} == {"string"}
+    assert [tuple(r) for r in stops.orderBy("stop_id").collect()] == [
+        ("007", "51.5", "-0.12"), ("8", "51.6", "-0.13")]
+    assert [tuple(r) for r in trips.collect()] == [("T1", "R1", "S1")]
 
 
 def test_time_to_seconds(spark):
