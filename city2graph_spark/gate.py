@@ -22,6 +22,8 @@ Cross-engine determinism rules used throughout (validated in round 1):
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,16 +52,17 @@ WAXMAN = dict(beta=0.6, r0=150.0, seed=42, p_min=1e-3)
 # — so repeating it for every SQL query in a session is waste; every query
 # still computes from the parquet files.  A different sf_dir in the same
 # session re-registers, so the views always point at the caller's dir.
-_REGISTERED_VIEWS: dict[tuple[str, int], str] = {}
+# Weakly keyed (an id() can be recycled); skipped only while all views exist.
+_REGISTERED_VIEWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
-    key = (spark.sparkContext.applicationId, id(spark))
-    if _REGISTERED_VIEWS.get(key) == sf_dir:
+    if _REGISTERED_VIEWS.get(spark) == sf_dir \
+            and all(spark.catalog.tableExists(t) for t in TABLES):
         return
     for t in TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
-    _REGISTERED_VIEWS[key] = sf_dir
+    _REGISTERED_VIEWS[spark] = sf_dir
 
 
 # --------------------------------------------------------------------------

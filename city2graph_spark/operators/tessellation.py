@@ -629,6 +629,31 @@ def _rings_area(rlist) -> float:
     return rings_net_area(list(rlist))
 
 
+def _face_index(encl) -> tuple[list, float, dict]:
+    """``(order, cell_size, grid)``: eids by (net area, eid), so the first
+    covering face in rank order is the smallest (an island beats the face
+    around it; a tie goes to the smaller eid), and a map from each cell
+    (floor(x / cell_size), floor(y / cell_size)) a face's all-ring bbox
+    touches to those faces' ascending ranks; ``cell_size`` is the mean
+    face bbox extent (``group_nodes``' default)."""
+    ranked = sorted(encl, key=lambda t: (_rings_area(t[1]), t[0]))
+    if not ranked:
+        return [], 1.0, {}
+    allv = [np.vstack(rl) for _, rl in ranked]
+    lo = np.array([v.min(axis=0) for v in allv])
+    hi = np.array([v.max(axis=0) for v in allv])
+    w, h = (hi - lo).mean(axis=0)
+    cs = max(float(max(w or 1.0, h or 1.0)), 1e-9)
+    c0 = np.floor(lo / cs).astype(np.int64).tolist()
+    c1 = np.floor(hi / cs).astype(np.int64).tolist()
+    grid: dict[tuple[int, int], list[int]] = {}
+    for r, ((x0, y0), (x1, y1)) in enumerate(zip(c0, c1)):
+        for gx in range(x0, x1 + 1):
+            for gy in range(y0, y1 + 1):
+                grid.setdefault((gx, gy), []).append(r)
+    return [eid for eid, _ in ranked], cs, grid
+
+
 def _subtract_holes(rl: list[np.ndarray], holes: list[np.ndarray]
                     ) -> list[np.ndarray]:
     """Ring list of (cell − enclosure holes), momepy-equivalent clipping of
@@ -827,13 +852,39 @@ def _tessellate_one_enclosure(ering: np.ndarray, pdf, segment: float,
     return None
 
 
+_CELL_COLS = ["enclosure_index", "place_id", "ring", "seq", "x", "y"]
+_CELL_SCHEMA = ("enclosure_index long, place_id long, ring long, seq long, "
+                "x double, y double")
+
+
+def _enclosure_cells(eid: int, rl: list[np.ndarray], pdf, segment: float,
+                     shrink: float):
+    """One enclosure's output rows (``_CELL_COLS``): the whole enclosure
+    as place -1 when ``pdf`` holds no building, else its Voronoi cells
+    among the buildings in ``pdf`` — or, when the retry ladder leaves the
+    partition degenerate, footprint fallback cells (reference
+    spatial.py:2657-2668 drops the enclosure's cells; M14 then gives each
+    building its own footprint)."""
+    import pandas as pd
+    cells = [(-1, rl)] if len(pdf) == 0 else _tessellate_one_enclosure(
+        rl[0], pdf, segment, shrink, holes=rl[1:])
+    if cells is None:
+        fb = pdf.sort_values(["poly_id", "ring", "seq"]).copy()
+        fb.insert(0, "enclosure_index", eid)
+        return fb.rename(columns={"poly_id": "place_id"})[_CELL_COLS]
+    return pd.DataFrame([(eid, pid, ri, i, float(x), float(y))
+                         for pid, rlist in cells
+                         for ri, ring in enumerate(rlist)
+                         for i, (x, y) in enumerate(ring)], columns=_CELL_COLS)
+
+
 def _tessellate_from_encl_df(building_verts: DataFrame, encl_df: DataFrame,
                              *, segment: float, shrink: float,
                              keep_empty: bool) -> DataFrame:
     """DataFrame-native downstream of :func:`enclosed_tessellation` for an
     enclosure RING TABLE (eid, ring, seq, x, y) instead of a driver ring
     list: per-eid areas via ``applyInPandas``, building assignment via the
-    same ``group_nodes`` cell-join + smallest-area window, and the
+    ``group_nodes`` cell-join + smallest-area window, and the
     per-enclosure Voronoi as a COGROUP of building verts with enclosure
     rings on eid — no enclosure broadcast, no driver gather anywhere.
     Empty enclosures fall out of the cogroup naturally (building side
@@ -877,37 +928,15 @@ def _tessellate_from_encl_df(building_verts: DataFrame, encl_df: DataFrame,
 
     def tess2(key, bpdf, epdf):
         import pandas as pd
-        eid = int(key[0])
-        cols = ["enclosure_index", "place_id", "ring", "seq", "x", "y"]
-        if len(epdf) == 0:
-            return pd.DataFrame(columns=cols)
+        if len(epdf) == 0 or (len(bpdf) == 0 and not ke):
+            return pd.DataFrame(columns=_CELL_COLS)
         rl = [grp.sort_values("seq")[["x", "y"]].to_numpy()
               for _, grp in epdf.groupby("ring", sort=True)]
-        if len(bpdf) == 0:
-            if not ke:
-                return pd.DataFrame(columns=cols)
-            rows = [(eid, -1, ri, i, float(x), float(y))
-                    for ri, ring in enumerate(rl)
-                    for i, (x, y) in enumerate(ring)]
-            return pd.DataFrame(rows, columns=cols)
-        cells = _tessellate_one_enclosure(rl[0], bpdf, seg_len, shr,
-                                          holes=rl[1:])
-        if cells is None:
-            fb = bpdf.sort_values(["poly_id", "ring", "seq"]).copy()
-            fb.insert(0, "enclosure_index", eid)
-            return fb.rename(columns={"poly_id": "place_id"})[cols]
-        rows = []
-        for pid, rlist in cells:
-            for ri, ring in enumerate(rlist):
-                for i, (x, y) in enumerate(ring):
-                    rows.append((eid, pid, ri, i, float(x), float(y)))
-        return pd.DataFrame(rows, columns=cols)
+        return _enclosure_cells(int(key[0]), rl, bpdf, seg_len, shr)
 
-    schema = ("enclosure_index long, place_id long, ring long, seq long, "
-              "x double, y double")
     return (verts.groupBy("eid")
             .cogroup(encl_df.groupBy("eid"))
-            .applyInPandas(tess2, schema))
+            .applyInPandas(tess2, _CELL_SCHEMA))
 
 
 def enclosed_tessellation(building_verts: DataFrame, barriers_mv: DataFrame, *,
@@ -925,24 +954,20 @@ def enclosed_tessellation(building_verts: DataFrame, barriers_mv: DataFrame, *,
     among the buildings inside it.
 
     Distribution: enclosures come from the street-scale barrier table
-    (driver polygonization, broadcast rings); buildings are assigned to
-    their smallest containing face by a vectorized PIP pass, and the
-    per-enclosure Voronoi runs as ``groupBy(eid).applyInPandas`` — the
-    natural partition key, since enclosures tile the city and each is
-    independent.  With an explicit ``limit`` or ``limit_mode="rect"`` the
-    building table never gathers anywhere at any scale.  The DEFAULT
+    (driver polygonization).  One broadcast ships their rings and a grid
+    index over their bboxes; a ``groupBy(poly_id)`` Python pass assigns
+    each building to the smallest face covering its area centroid (ties
+    to the smaller eid), and the per-enclosure Voronoi runs as
+    ``groupBy(eid).applyInPandas``.  With an explicit ``limit`` no action
+    but the barrier gather runs before the caller's.  The DEFAULT
     (``limit_mode="union"``, no ``limit``) derives the reference's
-    buffered-union limit: below ``union_driver_cap`` pre-merged building
-    runs the arrangement is a DRIVER pass over the gathered runs (fast,
-    bit-stable, momepy-like); past the cap ``union_mode="auto"`` switches
-    to the tiled DISTRIBUTED build (:mod:`.enclosures` — per-tile
-    arrangements, border-key stitching, label-propagation components; no
-    driver gather of building-scale data on the success path), and the
-    whole downstream (areas, assignment, per-enclosure Voronoi, empty
-    enclosures) runs DataFrame-native.  ``union_mode="driver"`` restores
-    the round-5 behavior (raise past the cap); ``union_mode="distributed"``
-    forces the tiled path at any size.  Note "union" became the default in
-    round 5 ("rect" before — see README).
+    buffered-union limit from one gather of at most ``union_driver_cap``
+    + 1 pre-merged building runs: within the cap the arrangement is a
+    DRIVER pass over them; past it ``union_mode="auto"`` switches to the
+    tiled DISTRIBUTED build (:mod:`.enclosures`), whose downstream (areas,
+    ``group_nodes`` assignment, per-enclosure Voronoi) runs
+    DataFrame-native.  ``union_mode="driver"`` raises past the cap;
+    ``union_mode="distributed"`` gathers nothing and forces the tiled path.
 
     ``barriers_mv``: movement polyline vertex table (movement_id, seq, x, y).
     ``limit``: (xmin, ymin, xmax, ymax) enclosure boundary; an explicit
@@ -960,7 +985,7 @@ def enclosed_tessellation(building_verts: DataFrame, barriers_mv: DataFrame, *,
     enclosure containing no buildings (kept as its own cell when
     ``keep_empty``, matching momepy)."""
     from .morphology import polyline_parts
-    from .polygons import polygon_centroids
+    from .polygons import _poly_id_dtype
     spark = building_verts.sparkSession
     parts = polyline_parts(barriers_mv).select("ax", "ay", "bx", "by").collect()
     segs = np.array([[r["ax"], r["ay"], r["bx"], r["by"]] for r in parts]) \
@@ -997,9 +1022,11 @@ def enclosed_tessellation(building_verts: DataFrame, barriers_mv: DataFrame, *,
                   .withColumn("_grp", F.sum(F.col("_new").cast("int")).over(w))
                   .groupBy("by0", "by1", "_grp")
                   .agg(F.min("bx0").alias("bx0"), F.max("bx1").alias("bx1")))
-        n_runs = merged.count()
+        # one bounded gather decides the path ("distributed" gathers none)
+        runs = [] if union_mode == "distributed" else \
+            merged.limit(union_driver_cap + 1).collect()
         if union_mode == "distributed" or (union_mode == "auto"
-                                           and n_runs > union_driver_cap):
+                                           and len(runs) > union_driver_cap):
             from .enclosures import enclosures_union_distributed
             caps = buffered_union_shapes(np.empty((0, 4)), segs, buffer,
                                          arc_segments)
@@ -1009,14 +1036,13 @@ def enclosed_tessellation(building_verts: DataFrame, barriers_mv: DataFrame, *,
             return _tessellate_from_encl_df(
                 building_verts, encl_df, segment=segment, shrink=shrink,
                 keep_empty=keep_empty)
-        if n_runs > union_driver_cap:
+        if len(runs) > union_driver_cap:
             raise ValueError(
-                f"buffered-union enclosure limit gathers {n_runs} merged "
-                f"building runs at the driver (> union_driver_cap="
-                f"{union_driver_cap}); pass an explicit limit, "
+                f"buffered-union enclosure limit gathers more than "
+                f"union_driver_cap={union_driver_cap} merged building runs "
+                f"at the driver; pass an explicit limit, "
                 f"limit_mode='rect', union_mode='auto'/'distributed', "
                 f"or raise the cap")
-        runs = merged.collect()
         if arc_segments > 0:
             # merged runs are buffered intervals — undo the dilation so
             # the rounded rect re-applies it with corner arcs
@@ -1044,82 +1070,53 @@ def enclosed_tessellation(building_verts: DataFrame, barriers_mv: DataFrame, *,
                      float(max(xs)) + buffer, float(max(ys)) + buffer)
         encl = build_enclosures(segs, limit)
 
-    # assign each building to the smallest containing face (smallest-area
-    # rule resolves nested faces — barrier islands come out as nested
-    # rings) via the group_nodes cell-join plan: face bboxes explode to
-    # cells, equi-join with cell-bucketed centroids, PIP refine, window
-    # tiebreak — no per-face Python loop, so a metro's ~10⁵ enclosures
-    # join instead of iterating inside every Arrow batch
-    from pyspark.sql import Window
-
-    from .polygons import group_nodes
     # normalize both modes to (eid, [exterior, hole, ...]) ring lists
     encl = [(eid, r if isinstance(r, list) else [r]) for eid, r in encl]
-    face_rows, area_rows = [], []
-    for eid, rlist in encl:
-        area_rows.append((eid, _rings_area(rlist)))
-        for ri, ring in enumerate(rlist):
-            for i in range(len(ring)):
-                face_rows.append((eid, ri, i, float(ring[i, 0]),
-                                  float(ring[i, 1])))
-    faces_df = spark.createDataFrame(
-        face_rows, "poly_id long, ring long, seq long, x double, y double")
-    areas_df = spark.createDataFrame(area_rows, "eid long, _area double")
-    cents = polygon_centroids(building_verts)
-    pts = cents.select(F.col("poly_id").alias("node_id"),
-                       F.col("cx").alias("x"), F.col("cy").alias("y"))
-    hits = group_nodes(faces_df, pts).withColumnRenamed("poly_id", "eid")
-    wn = Window.partitionBy("node_id").orderBy(F.col("_area").asc(),
-                                               F.col("eid").asc())
-    eids = (hits.join(F.broadcast(areas_df), "eid")
-            .withColumn("_rn", F.row_number().over(wn))
-            .where(F.col("_rn") == 1)
-            .select(F.col("node_id").alias("poly_id"), "eid")
-            .localCheckpoint())   # consumed by the verts join AND keep_empty
-    verts = building_verts \
-        .select("poly_id", "ring", "seq", "x", "y").join(eids, "poly_id")
-
-    ring_map_b = spark.sparkContext.broadcast({eid: rl for eid, rl in encl})
+    # ONE broadcast serves both Python stages: the rings the Voronoi reads
+    # and the face index the building→face assignment reads — no driver
+    # action between the barrier gather and the caller's
+    faces_b = spark.sparkContext.broadcast(
+        ({eid: rl for eid, rl in encl}, *_face_index(encl)))
+    dt = _poly_id_dtype(building_verts)
+    vschema = "ring long, seq long, x double, y double, eid long"
     seg_len, shr = float(segment), float(shrink)
 
-    def tess(key, pdf):
-        import pandas as pd
-        eid = int(key[0])
-        rl = ring_map_b.value[eid]
-        cells = _tessellate_one_enclosure(rl[0], pdf, seg_len, shr,
-                                          holes=rl[1:])
-        if cells is None:
-            # retry ladder exhausted: the enclosure's partition stays
-            # degenerate, so its buildings degrade to footprint fallback
-            # cells (reference spatial.py:2657-2668 drops the enclosure's
-            # cells; M14 then gives each building its own footprint)
-            fb = pdf.sort_values(["poly_id", "ring", "seq"]).copy()
-            fb.insert(0, "enclosure_index", eid)
-            return fb.rename(columns={"poly_id": "place_id"})[
-                ["enclosure_index", "place_id", "ring", "seq", "x", "y"]]
-        rows = []
-        for pid, rlist in cells:
-            for ri, ring in enumerate(rlist):
-                for i, (x, y) in enumerate(ring):
-                    rows.append((eid, pid, ri, i, float(x), float(y)))
-        return pd.DataFrame(rows, columns=["enclosure_index", "place_id",
-                                           "ring", "seq", "x", "y"])
+    def locate(key, pdf):
+        """The building's rows tagged with the first face, in its centroid
+        cell's rank order, that covers the centroid — or no rows."""
+        import math
 
-    schema = ("enclosure_index long, place_id long, ring long, seq long, "
-              "x double, y double")
-    out = verts.groupBy("eid").applyInPandas(tess, schema)
+        from ..geo.kernels import points_in_polygon, rings_area_centroid
+        rings_of, order, cs, grid = faces_b.value
+        pdf = pdf.sort_values(["ring", "seq"])
+        _, cx, cy = rings_area_centroid(
+            [g[["x", "y"]].to_numpy() for _, g in pdf.groupby("ring")])
+        cell = (math.floor(cx / cs), math.floor(cy / cs)) \
+            if math.isfinite(cx) and math.isfinite(cy) else None
+        for rank in grid.get(cell, ()):
+            if points_in_polygon(np.array([cx]), np.array([cy]), [
+                    (r[:, 0], r[:, 1]) for r in rings_of[order[rank]]])[0]:
+                return pdf.assign(eid=order[rank])
+        return pdf.iloc[:0].assign(eid=0)
+
+    verts = (building_verts.select("poly_id", "ring", "seq", "x", "y")
+             .groupBy("poly_id")
+             .applyInPandas(locate, f"poly_id {dt}, {vschema}"))
     if keep_empty:
-        used = {r["eid"] for r in eids.select("eid").dropDuplicates().collect()}
-        empty_rows = []
-        for eid, rlist in encl:
-            if eid in used:
-                continue
-            for ri, ring in enumerate(rlist):
-                for i, (x, y) in enumerate(ring):
-                    empty_rows.append((eid, -1, ri, i, float(x), float(y)))
-        if empty_rows:
-            out = out.unionByName(spark.createDataFrame(empty_rows, schema))
-    return out
+        # one sentinel row per enclosure, marked ring = -1: a null poly_id
+        # would turn a long id column into float64 in pandas
+        verts = verts.unionByName(spark.createDataFrame(
+            [(0, -1, 0, 0.0, 0.0, eid) for eid, _ in encl],
+            f"poly_id long, {vschema}")
+            .withColumn("poly_id", F.col("poly_id").cast(dt)))
+
+    def tess(key, pdf):
+        eid = int(key[0])
+        # keep_empty: a sentinel-only enclosure comes out as its own cell
+        return _enclosure_cells(eid, faces_b.value[0][eid],
+                                pdf[pdf["ring"] >= 0], seg_len, shr)
+
+    return verts.groupBy("eid").applyInPandas(tess, _CELL_SCHEMA)
 
 
 def create_tessellation(building_verts: DataFrame,

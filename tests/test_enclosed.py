@@ -275,3 +275,69 @@ def test_courtyard_hole_preserved(spark):
     vx, vy = ring1["x"].to_numpy(), ring1["y"].to_numpy()
     got = points_covered_by_ring(np.array([10.0]), np.array([10.0]), vx, vy)
     assert got[0]
+
+
+def test_building_assignment_semantics(spark, mv):
+    """Building→enclosure assignment: the building's area centroid picks
+    the smallest boundary-inclusive covering face.  A NaN building is
+    dropped, a centroid on the street two equal faces share goes to the
+    smaller eid, and a zero-area footprint falls back to its vertex mean."""
+    nan = float("nan")
+    b = _square(0, 25.0, 50.0, h=2.0) + _square(1, 75.0, 50.0, h=2.0) \
+        + _square(2, nan, 50.0, h=2.0) + _square(3, 100.0, 50.0, h=2.0) \
+        + _square(4, 150.0, 150.0, h=0.0)
+    bv = spark.createDataFrame(
+        b, "poly_id long, ring long, seq long, x double, y double")
+    cells = enclosed_tessellation(bv, mv, segment=2.0,
+                                  limit=(0.0, 0.0, 200.0, 200.0))
+    got = sorted((r.enclosure_index, r.place_id) for r in
+                 cells.select("enclosure_index", "place_id")
+                 .dropDuplicates().collect())
+    assert got == [(0, 0), (0, 1), (0, 3), (1, -1), (2, -1), (3, 4)]
+
+
+def test_building_assignment_island_string_ids(spark):
+    """A building inside an island street loop belongs to the island, not
+    to the face around it; string poly_ids are carried through."""
+    loop = [(0.0, 0.0), (100.0, 0.0), (100.0, 100.0), (0.0, 100.0)]
+    island = [(40.0, 40.0), (60.0, 40.0), (60.0, 60.0), (40.0, 60.0)]
+    rows, mid = [], 0
+    for ring in (loop, island):
+        for i, (ax, ay) in enumerate(ring):
+            bx, by = ring[(i + 1) % len(ring)]
+            rows += [(mid, 0, ax, ay), (mid, 1, bx, by)]
+            mid += 1
+    mv = spark.createDataFrame(
+        rows, "movement_id long, seq long, x double, y double")
+    b = _square("7", 50.0, 50.0, h=2.0) + _square("8", 20.0, 20.0, h=2.0)
+    bv = spark.createDataFrame(
+        b, "poly_id string, ring long, seq long, x double, y double")
+    cells = enclosed_tessellation(bv, mv, segment=2.0,
+                                  limit=(0.0, 0.0, 100.0, 100.0)).toPandas()
+    info = {}
+    for pid, grp in cells[cells["ring"] == 0].groupby("place_id"):
+        g = grp.sort_values("seq")
+        info[pid] = abs(shoelace_area_centroid(g["x"].to_numpy(),
+                                               g["y"].to_numpy())[0])
+    assert sorted(info) == [7, 8]
+    assert abs(info[7] - 400.0) < 1e-6          # the whole island
+
+
+def test_enclosed_tessellation_is_lazy(spark, mv, buildings):
+    """Building the enclosed tessellation plan gathers only the barriers:
+    no building-side job runs until the caller acts on the result."""
+    from city2graph_spark.operators.morphology import polyline_parts
+    sc = spark.sparkContext
+    sc.setJobGroup("barrier_gather", "barrier gather")
+    polyline_parts(mv).select("ax", "ay", "bx", "by").collect()
+    sc.setJobGroup("enclosed_plan", "enclosed tessellation plan")
+    try:
+        enclosed_tessellation(buildings, mv, segment=2.0,
+                              limit=(0.0, 0.0, 200.0, 200.0),
+                              keep_empty=True)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    tracker = sc.statusTracker()
+    assert len(tracker.getJobIdsForGroup("enclosed_plan")) \
+        == len(tracker.getJobIdsForGroup("barrier_gather"))

@@ -52,6 +52,14 @@ def test_dedup_library_matches_gate_sql(spark):
     assert nd_lib == nd_sql
 
 
+def test_register_views_restores_a_dropped_view(spark):
+    """The registration memo must not skip a session whose views are gone."""
+    register_views(spark, SF)
+    spark.catalog.dropTempView("documents")
+    register_views(spark, SF)
+    assert spark.catalog.tableExists("documents")
+
+
 def test_minhash_fast_path_finds_planted_neardups(spark):
     """The fused mapInPandas library path (the bench headliner) must
     bucket planted near-duplicates together and stay deterministic."""
