@@ -25,8 +25,17 @@ from pyspark.sql import functions as F
 from .net import BroadcastGraph, snap_points
 
 
-def _s(c) -> F.Column:
-    return F.col(c).cast("string")
+def _linestring(*xy_cols: str) -> F.Column:
+    """WKT ``LINESTRING (x1 y1, x2 y2, …)`` over (x, y) column-name pairs:
+    one JVM ``concat`` of double→string casts, so a null coordinate gives
+    a null line (``concat_ws`` would skip it and change the string)."""
+    parts = [F.lit("LINESTRING (")]
+    for i in range(0, len(xy_cols), 2):
+        if i:
+            parts.append(F.lit(", "))
+        parts += [F.col(xy_cols[i]).cast("string"), F.lit(" "),
+                  F.col(xy_cols[i + 1]).cast("string")]
+    return F.concat(*parts, F.lit(")"))
 
 
 def with_edge_geometry(edges: DataFrame, points: DataFrame, *,
@@ -41,14 +50,9 @@ def with_edge_geometry(edges: DataFrame, points: DataFrame, *,
                       F.col("y").alias("_vy"))
     e = edges.join(a, src).join(b, dst)
     if metric == "manhattan":
-        wkt = F.concat(F.lit("LINESTRING ("),
-                       _s("_ux"), F.lit(" "), _s("_uy"), F.lit(", "),
-                       _s("_vx"), F.lit(" "), _s("_uy"), F.lit(", "),
-                       _s("_vx"), F.lit(" "), _s("_vy"), F.lit(")"))
+        wkt = _linestring("_ux", "_uy", "_vx", "_uy", "_vx", "_vy")
     else:
-        wkt = F.concat(F.lit("LINESTRING ("),
-                       _s("_ux"), F.lit(" "), _s("_uy"), F.lit(", "),
-                       _s("_vx"), F.lit(" "), _s("_vy"), F.lit(")"))
+        wkt = _linestring("_ux", "_uy", "_vx", "_vy")
     return e.withColumn(out, wkt).drop("_ux", "_uy", "_vx", "_vy")
 
 
@@ -125,10 +129,8 @@ def network_edge_geometry(edges: DataFrame, points: DataFrame,
                       F.col("y").alias("_uy"))
     b = points.select(F.col("node_id").alias(dst), F.col("x").alias("_vx"),
                       F.col("y").alias("_vy"))
-    straight = F.concat(F.lit("LINESTRING ("),
-                        _s("_ux"), F.lit(" "), _s("_uy"), F.lit(", "),
-                        _s("_vx"), F.lit(" "), _s("_vy"), F.lit(")"))
     return (need.join(wkts, ["_sa", "_sb"], "left")
             .join(a, src).join(b, dst)
-            .withColumn(out, F.coalesce(F.col("_wkt"), straight))
+            .withColumn(out, F.coalesce(F.col("_wkt"),
+                                        _linestring("_ux", "_uy", "_vx", "_vy")))
             .drop("_sa", "_sb", "_wkt", "_ux", "_uy", "_vx", "_vy"))

@@ -34,8 +34,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..index import explode_cells_in_box, with_cell
+from .geometry import _linestring
 from .net import BroadcastGraph
-from .polygons import contiguity_graph, polygon_centroids
+from .polygons import _covered_points, contiguity_graph, polygon_centroids
 from .topology import dual_graph, segments_to_graph
 
 
@@ -150,6 +151,17 @@ def place_to_place_graph(place_verts: DataFrame,
 # M7
 # --------------------------------------------------------------------------
 
+def _movement_centroids(mv: DataFrame) -> DataFrame:
+    """(movement_id, mx, my): length-weighted part-midpoint centroid of
+    each movement polyline (GEOS ``centroid`` of a LineString)."""
+    return (polyline_parts(mv)
+            .withColumn("_wx", (F.col("ax") + F.col("bx")) / 2 * F.col("part_len"))
+            .withColumn("_wy", (F.col("ay") + F.col("by")) / 2 * F.col("part_len"))
+            .groupBy("movement_id")
+            .agg((F.sum("_wx") / F.sum("part_len")).alias("mx"),
+                 (F.sum("_wy") / F.sum("part_len")).alias("my")))
+
+
 def place_to_movement_graph(place_verts: DataFrame, mv: DataFrame, *,
                             tolerance: float = 1e-6,
                             max_connection_distance: float = float("inf"),
@@ -164,7 +176,9 @@ def place_to_movement_graph(place_verts: DataFrame, mv: DataFrame, *,
     unmatched places.  Weight = centroid↔centroid distance
     (morphology.py:3461-3478).
     """
-    parts = polyline_parts(mv).persist()
+    # eager localCheckpoints (parts and matched are each read several
+    # times): neither leaves a cached plan behind once the result is used
+    parts = polyline_parts(mv).localCheckpoint()
     # ALL rings: a segment inside a courtyard hole is OUTSIDE the place —
     # its dwithin distance is to the hole boundary, so hole edges join the
     # distance pass and the containment test is hole-aware (GEOS dwithin)
@@ -260,7 +274,7 @@ def place_to_movement_graph(place_verts: DataFrame, mv: DataFrame, *,
 
     dists = cand.mapInPandas(refine, "poly_id long, movement_id long, dist double")
     dists = dists.groupBy("poly_id", "movement_id").agg(F.min("dist").alias("dist"))
-    matched = dists.where(F.col("dist") <= tol).persist()
+    matched = dists.where(F.col("dist") <= tol).localCheckpoint()
 
     # nearest fallback for unmatched places (morphology.py:1336-1419): the
     # reference's _connect_unmatched_place_to_nearest_movement searches ALL
@@ -339,13 +353,7 @@ def place_to_movement_graph(place_verts: DataFrame, mv: DataFrame, *,
 
     # weight = place-centroid ↔ movement-centroid distance
     pc = polygon_centroids(place_verts)
-    mc = (polyline_parts(mv)
-          .withColumn("_wx", (F.col("ax") + F.col("bx")) / 2 * F.col("part_len"))
-          .withColumn("_wy", (F.col("ay") + F.col("by")) / 2 * F.col("part_len"))
-          .groupBy("movement_id")
-          .agg((F.sum("_wx") / F.sum("part_len")).alias("mx"),
-               (F.sum("_wy") / F.sum("part_len")).alias("my")))
-    return (pairs.join(pc, "poly_id").join(mc, "movement_id")
+    return (pairs.join(pc, "poly_id").join(_movement_centroids(mv), "movement_id")
             .select("poly_id", "movement_id",
                     F.sqrt((F.col("cx") - F.col("mx")) * (F.col("cx") - F.col("mx"))
                            + (F.col("cy") - F.col("my")) * (F.col("cy") - F.col("my")))
@@ -399,16 +407,20 @@ def reachability_field(mv: DataFrame, center_xy: tuple[float, float], *,
     return costs, nodes, edges
 
 
+def _cost_frame(spark, costs: dict) -> DataFrame:
+    """(node_id, cost) rows of a node→cost dict (empty dict: no rows)."""
+    return spark.createDataFrame(
+        [(int(k), float(v)) for k, v in costs.items()] or [(None, None)],
+        "node_id long, cost double").where(F.col("node_id").isNotNull())
+
+
 def segments_within_network_distance(mv: DataFrame, costs: dict,
                                      max_distance: float, *,
                                      graph: tuple[DataFrame, DataFrame]
                                      | None = None) -> DataFrame:
     """M11: movement kept iff min(endpoint node cost) ≤ max_distance."""
     _, edges = graph if graph is not None else street_graph(mv)
-    spark = mv.sparkSession
-    cost_df = spark.createDataFrame(
-        [(int(k), float(v)) for k, v in costs.items()] or [(None, None)],
-        "node_id long, cost double").where(F.col("node_id").isNotNull())
+    cost_df = _cost_frame(mv.sparkSession, costs)
     e = (edges
          .join(cost_df.withColumnRenamed("node_id", "from_node_id")
                .withColumnRenamed("cost", "_cf"), "from_node_id", "left")
@@ -432,10 +444,7 @@ def reachable_within_caps(points: DataFrame, mv: DataFrame, costs: dict, *,
     (morphology.py:3212-3279)."""
     parts = polyline_parts(mv)
     nodes, _ = graph if graph is not None else street_graph(mv)
-    spark = points.sparkSession
-    cost_df = spark.createDataFrame(
-        [(int(k), float(v)) for k, v in costs.items()] or [(None, None)],
-        "node_id long, cost double").where(F.col("node_id").isNotNull())
+    cost_df = _cost_frame(points.sparkSession, costs)
     # _cf must be the cost at the GEOMETRIC start (along is measured from
     # it), _ct at the geometric end — canonical from/to can be flipped
     pe = (oriented_endpoint_nodes(mv, nodes)
@@ -593,7 +602,6 @@ def add_building_info(cell_verts: DataFrame, building_verts: DataFrame
 
     Cells with no matched building keep ``building_id`` null (the
     reference's None building_geometry)."""
-    from .polygons import group_nodes, polygon_centroids
     # collision-free composite key: ids are numeric-rendered strings, so the
     # \x01 delimiter can't occur inside either component (no hash in the
     # join key — a 2^-32 xxhash collision would silently merge two cells)
@@ -604,7 +612,7 @@ def add_building_info(cell_verts: DataFrame, building_verts: DataFrame
     cents = polygon_centroids(building_verts)
     pts = cents.select(F.col("poly_id").alias("node_id"),
                        F.col("cx").alias("x"), F.col("cy").alias("y"))
-    m = group_nodes(polys, pts) \
+    m = _covered_points(polys, pts) \
         .select(F.col("poly_id").alias("_ck"),
                 F.col("node_id").alias("building_id")).dropDuplicates()
     cells = (cv.select("_ck", "place_id").dropDuplicates()
@@ -654,7 +662,8 @@ def morphological_graph(building_verts: DataFrame, mv: DataFrame,
                         barrier_verts: DataFrame | None = None,
                         barrier_only: DataFrame | None = None
                         ) -> dict[str, DataFrame]:
-    """Morphological-graph DAG (morphology.py:156-348).
+    """Morphological-graph DAG (morphology.py:156-348): the one-distance
+    case of :func:`morphological_graphs`, which runs the whole plan.
 
     Default ``tessellation="enclosed"`` matches the reference's default
     (``tessellation_fallback=False`` ⇒ momepy enclosed tessellation,
@@ -685,50 +694,13 @@ def morphological_graph(building_verts: DataFrame, mv: DataFrame,
       barriers, clipped to the reachability radius like the reference's
       ``_append_barrier_context_segments``.
     """
-    import math
-    from ..crs import ensure_same_crs
-    ensure_same_crs(building_verts, mv)
-    if barrier_only is not None:
-        bids = barrier_only.select("movement_id").dropDuplicates()
-        mv_move = mv.join(bids, "movement_id", "left_anti")
-    else:
-        bids, mv_move = None, mv
-    # the street graph is consumed by M9 (reachability), M11 (near filter)
-    # and M10 (centroid caps) — build its two-stage node-id pipeline ONCE
-    # and checkpoint it, instead of re-running segments_to_graph per stage
-    sg_nodes, sg_edges = street_graph(mv_move)
-    sg = (sg_nodes.localCheckpoint(), sg_edges.localCheckpoint())
-    costs, _, _ = reachability_field(mv_move, center_xy, graph=sg)
-    # localCheckpoint (not persist): downstream layers self-join mv_near
-    # repeatedly — truncating the lineage keeps Catalyst from re-optimizing
-    # the full reachability plan inside every self-join (measured 89s → 4s
-    # on the connected_to layer at gate scale)
-    mv_near = segments_within_network_distance(mv_move, costs, distance,
-                                               graph=sg).localCheckpoint()
-    tess_mv = mv_near
-    if bids is not None:
-        radius = distance if math.isinf(clipping_buffer) \
-            else distance + clipping_buffer
-        bar_rows = mv.join(bids, "movement_id", "left_semi")
-        cx, cy = float(center_xy[0]), float(center_xy[1])
-        near_b = (bar_rows.groupBy("movement_id")
-                  .agg(F.min(F.sqrt((F.col("x") - cx) * (F.col("x") - cx)
-                                    + (F.col("y") - cy) * (F.col("y") - cy)))
-                       .alias("_d"))
-                  .where(F.col("_d") <= F.lit(float(radius)))
-                  .select("movement_id"))
-        tess_mv = mv_near.unionByName(
-            bar_rows.join(near_b, "movement_id", "left_semi"))
-    cells = _build_tessellation(building_verts,
-                                _barrier_geometry(tess_mv, barrier_verts),
-                                tessellation)
-    return _layers_for_distance(
-        cells, building_verts, mv_move, mv_near, costs, distance,
-        extent_buffer=extent_buffer, clipping_buffer=clipping_buffer,
-        contiguity=contiguity, tolerance=tolerance,
-        keep_buildings=keep_buildings,
-        enclosed=(tessellation == "enclosed"),
-        faced_mv=_barrier_geometry(mv_near, barrier_verts), graph=sg)
+    d = float(distance)
+    return morphological_graphs(
+        building_verts, mv, center_xy, [d], extent_buffer=extent_buffer,
+        clipping_buffer=clipping_buffer, contiguity=contiguity,
+        tolerance=tolerance, keep_buildings=keep_buildings,
+        tessellation=tessellation, barrier_verts=barrier_verts,
+        barrier_only=barrier_only)[d]
 
 
 def morphological_graphs(building_verts: DataFrame, mv: DataFrame,
@@ -761,9 +733,16 @@ def morphological_graphs(building_verts: DataFrame, mv: DataFrame,
         mv_move = mv.join(bids, "movement_id", "left_anti")
     else:
         bids, mv_move = None, mv
+    # the street graph is consumed by M9 (reachability), M11 (near filter)
+    # and M10 (centroid caps) — build its two-stage node-id pipeline ONCE
+    # and checkpoint it, instead of re-running segments_to_graph per stage
     sg_nodes, sg_edges = street_graph(mv_move)
     sg = (sg_nodes.localCheckpoint(), sg_edges.localCheckpoint())
     costs, _, _ = reachability_field(mv_move, center_xy, graph=sg)
+    # localCheckpoint (not persist): downstream layers self-join mv_near
+    # repeatedly — truncating the lineage keeps Catalyst from re-optimizing
+    # the full reachability plan inside every self-join (measured 89s → 4s
+    # on the connected_to layer at gate scale)
     mv_near_max = segments_within_network_distance(mv_move, costs, max(dv),
                                                    graph=sg).localCheckpoint()
     tess_mv = mv_near_max
@@ -866,39 +845,28 @@ def _layers_for_distance(cells: DataFrame, building_verts: DataFrame,
 
     # D4: every layer's edges carry WKT geometry, like the reference's
     # centroid↔centroid edge LINESTRINGs (morphology.py:3461-3478) —
-    # pure JVM concat expressions over centroid joins
-    def _line(ax, ay, bx, by):
-        s = lambda c: F.col(c).cast("string")  # noqa: E731
-        return F.concat(F.lit("LINESTRING ("), s(ax), F.lit(" "), s(ay),
-                        F.lit(", "), s(bx), F.lit(" "), s(by), F.lit(")"))
-
-    pc = polygon_centroids(pv)
-    mcent = (polyline_parts(mv_near)
-             .withColumn("_wx", (F.col("ax") + F.col("bx")) / 2
-                         * F.col("part_len"))
-             .withColumn("_wy", (F.col("ay") + F.col("by")) / 2
-                         * F.col("part_len"))
-             .groupBy("movement_id")
-             .agg((F.sum("_wx") / F.sum("part_len")).alias("_mx"),
-                  (F.sum("_wy") / F.sum("part_len")).alias("_my")))
-    ca = pc.select(F.col("poly_id").alias("src"), F.col("cx").alias("_sx"),
-                   F.col("cy").alias("_sy"))
-    cb = pc.select(F.col("poly_id").alias("dst"), F.col("cx").alias("_dx2"),
-                   F.col("cy").alias("_dy2"))
+    # pure JVM concat expressions over centroid joins.  The M10 centroids
+    # serve: place_id is unique per cell, and the joins reach only kept
+    # places
+    mcent = _movement_centroids(mv_near)
+    ca = cents.select(F.col("node_id").alias("src"), F.col("x").alias("_sx"),
+                      F.col("y").alias("_sy"))
+    cb = cents.select(F.col("node_id").alias("dst"), F.col("x").alias("_dx2"),
+                      F.col("y").alias("_dy2"))
     touched = (touched.join(ca, "src").join(cb, "dst")
-               .withColumn("geometry", _line("_sx", "_sy", "_dx2", "_dy2"))
+               .withColumn("geometry", _linestring("_sx", "_sy", "_dx2", "_dy2"))
                .drop("_sx", "_sy", "_dx2", "_dy2"))
     faced = (faced.join(ca.withColumnRenamed("src", "poly_id"), "poly_id")
              .join(mcent, "movement_id")
-             .withColumn("geometry", _line("_sx", "_sy", "_mx", "_my"))
-             .drop("_sx", "_sy", "_mx", "_my"))
+             .withColumn("geometry", _linestring("_sx", "_sy", "mx", "my"))
+             .drop("_sx", "_sy", "mx", "my"))
     ma = mcent.select(F.col("movement_id").alias("from_movement_id"),
-                      F.col("_mx").alias("_ax"), F.col("_my").alias("_ay"))
+                      F.col("mx").alias("_ax"), F.col("my").alias("_ay"))
     mb = mcent.select(F.col("movement_id").alias("to_movement_id"),
-                      F.col("_mx").alias("_bx"), F.col("_my").alias("_by"))
+                      F.col("mx").alias("_bx"), F.col("my").alias("_by"))
     connected = (connected.join(ma, "from_movement_id")
                  .join(mb, "to_movement_id")
-                 .withColumn("geometry", _line("_ax", "_ay", "_bx", "_by"))
+                 .withColumn("geometry", _linestring("_ax", "_ay", "_bx", "_by"))
                  .drop("_ax", "_ay", "_bx", "_by"))
 
     return {"places": cells_kept, "movements": mv_near,

@@ -144,13 +144,30 @@ def group_nodes(verts: DataFrame, points: DataFrame, *,
                 metric: str = "euclidean") -> DataFrame:
     """Polygon→point containment edges (reference proximity.py:1830-1965).
 
-    Plan: polygon bboxes → cell cover (variable per-row halo) → equi-join
-    with cell-bucketed points (the STRtree sjoin analogue) → exact
-    boundary-inclusive PIP refinement in one vectorized pandas pass →
-    weight = metric(centroid, point).
+    Plan: :func:`_covered_points` (cell-cover join + exact PIP) → weight =
+    metric(centroid, point).
 
     Returns (poly_id, node_id, weight).
     """
+    hits = _covered_points(verts, points, predicate=predicate,
+                           cell_size=cell_size)
+    out = hits.join(polygon_centroids(verts), "poly_id")
+    if metric == "manhattan":
+        w = F.abs(F.col("cx") - F.col("x")) + F.abs(F.col("cy") - F.col("y"))
+    else:
+        w = F.sqrt((F.col("cx") - F.col("x")) * (F.col("cx") - F.col("x"))
+                   + (F.col("cy") - F.col("y")) * (F.col("cy") - F.col("y")))
+    return out.select("poly_id", "node_id", w.alias("weight"))
+
+
+def _covered_points(verts: DataFrame, points: DataFrame, *,
+                    predicate: str = "covered_by",
+                    cell_size: float | None = None) -> DataFrame:
+    """(poly_id, node_id, x, y) for every point the polygon covers:
+    polygon bboxes → cell cover (variable per-row halo) → equi-join with
+    cell-bucketed points (the STRtree sjoin analogue) → exact
+    boundary-inclusive PIP refinement in one vectorized pandas pass.  No
+    centroid pass: callers that need no weight call this directly."""
     from ..crs import ensure_same_crs
     ensure_same_crs(verts, points)
     dt = _poly_id_dtype(verts)
@@ -243,13 +260,5 @@ def group_nodes(verts: DataFrame, points: DataFrame, *,
             if out:
                 yield pd.concat(out)
 
-    hits = cand.mapInPandas(refine, f"poly_id {dt}, node_id long, "
+    return cand.mapInPandas(refine, f"poly_id {dt}, node_id long, "
                                     "x double, y double")
-    cents = polygon_centroids(verts)
-    out = hits.join(cents, "poly_id")
-    if metric == "manhattan":
-        w = F.abs(F.col("cx") - F.col("x")) + F.abs(F.col("cy") - F.col("y"))
-    else:
-        w = F.sqrt((F.col("cx") - F.col("x")) * (F.col("cx") - F.col("x"))
-                   + (F.col("cy") - F.col("y")) * (F.col("cy") - F.col("y")))
-    return out.select("poly_id", "node_id", w.alias("weight"))

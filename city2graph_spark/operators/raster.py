@@ -71,7 +71,7 @@ def rasterize_polygons(verts: DataFrame, *, cell_size: float,
     (GDAL ``all_touched=False``).  Plan: per-polygon bbox → candidate
     pixel explode → exact PIP refine via the ``group_nodes`` kernel.
     Returns (poly_id, px, py)."""
-    from .polygons import group_nodes
+    from .polygons import _covered_points
     # all rings: superset bbox, exact for multipart ring lists
     ext = verts
     bbox = ext.groupBy("poly_id").agg(
@@ -89,8 +89,8 @@ def rasterize_polygons(verts: DataFrame, *, cell_size: float,
                .withColumn("node_id", _pack_pixel(F.col("px"), F.col("py")))
                .withColumn("x", (F.col("px") + 0.5) * cell_size + origin[0])
                .withColumn("y", (F.col("py") + 0.5) * cell_size + origin[1]))
-    hits = group_nodes(verts, centers.select("node_id", "x", "y"),
-                       cell_size=cell_size * 4)
+    hits = _covered_points(verts, centers.select("node_id", "x", "y"),
+                           cell_size=cell_size * 4)
     return (hits.join(centers.select("node_id", "px", "py"), "node_id")
             .select("poly_id", "px", "py"))
 
@@ -230,10 +230,10 @@ def zonal_stats(raster: DataFrame, zone_verts: DataFrame, *,
     pixel centers PIP-join zone polygons (``group_nodes`` plan), then one
     partial-aggregated groupBy.  Returns
     (zone_id, n, value_sum, value_min, value_max)."""
-    from .polygons import group_nodes
+    from .polygons import _covered_points
     pts = raster_to_points(raster, cell_size=cell_size, origin=origin) \
         .withColumn("node_id", _pack_pixel(F.col("px"), F.col("py")))
-    hits = group_nodes(zone_verts, pts.select("node_id", "x", "y"))
+    hits = _covered_points(zone_verts, pts.select("node_id", "x", "y"))
     vals = pts.select("node_id", F.col(value_col).alias("_v"))
     return (hits.join(vals, "node_id")
             .groupBy(F.col("poly_id").alias("zone_id"))

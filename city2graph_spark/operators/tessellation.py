@@ -891,7 +891,7 @@ def _tessellate_from_encl_df(building_verts: DataFrame, encl_df: DataFrame,
     empty ⇒ place_id −1 rows when ``keep_empty``)."""
     from pyspark.sql import Window
 
-    from .polygons import group_nodes, polygon_centroids
+    from .polygons import _covered_points, polygon_centroids
     encl_df = encl_df.localCheckpoint()
 
     def area_fn(key, pdf):
@@ -910,7 +910,7 @@ def _tessellate_from_encl_df(building_verts: DataFrame, encl_df: DataFrame,
     cents = polygon_centroids(building_verts)
     pts = cents.select(F.col("poly_id").alias("node_id"),
                        F.col("cx").alias("x"), F.col("cy").alias("y"))
-    hits = group_nodes(faces_df, pts).withColumnRenamed("poly_id", "eid")
+    hits = _covered_points(faces_df, pts).withColumnRenamed("poly_id", "eid")
     wn = Window.partitionBy("node_id").orderBy(F.col("_area").asc(),
                                                F.col("eid").asc())
     eids = (hits.join(areas_df, "eid")

@@ -7,6 +7,11 @@ is md5-derived so results are deterministic and engine-portable, except for
 the MinHash signatures of ``minhash_lsh_pairs``: a fused SplitMix64 kernel.
 Its md5 twin ``minhash_lsh_pairs_md5`` runs the same band join over md5
 signatures, and is the one the gate SQL certifies.
+
+One banded bucket self-join, :func:`_band_pairs`, serves MinHash, SimHash
+and ``simsearch.ann_lsh_candidates`` (SRP-LSH).  It emits each pair once,
+from its first shared band, so its pairs are distinct without a
+dropDuplicates.
 """
 
 from __future__ import annotations
@@ -143,49 +148,50 @@ def minhash_signatures(docs: DataFrame, *, n_hashes: int = 8,
 
 def minhash_lsh_pairs(docs: DataFrame, *, n_hashes: int = 8, band_rows: int = 2,
                       shingle_n: int = 4) -> DataFrame:
-    """LSH candidate pairs: docs sharing any full band of minhashes.
-    Banded bucket equi-join — never all-pairs.
-
-    Plan shape: both band sides shuffle on (band, bsig) — the forced
-    sort-merge join makes the two exchange subtrees canonically identical,
-    so the signature kernel runs ONCE and the second side is a
-    ReusedExchange (the planner's broadcast pick evaluated the mapInPandas
-    subtree twice, and a broadcast build side can never be the right call
-    for a self-join whose sides are by construction the same size).  Each
-    pair is emitted exactly once, from its FIRST colliding band — both full
-    signatures ride through the join and a codegen filter keeps the band
-    row only when every earlier band's slices differ — which replaces the
-    output-sized dropDuplicates exchange+aggregate with a filter.  SMJ on
-    the band key also keeps AQE's skew-join split available for hot buckets
-    (near-identical corpora)."""
-    return _lsh_band_pairs(
+    """LSH candidate pairs: distinct (doc_a < doc_b) pairs of docs sharing
+    any full band of ``band_rows`` minhashes — the :func:`_band_pairs`
+    bucket self-join, never all-pairs; each pair comes once, from its first
+    shared band."""
+    return _band_pairs(
         minhash_signatures(docs, n_hashes=n_hashes, shingle_n=shingle_n),
-        n_hashes=n_hashes, band_rows=band_rows)
+        "sig", lambda sig, b: F.slice(sig, b * band_rows + 1, band_rows),
+        n_hashes // band_rows).select("doc_a", "doc_b")
 
 
-def _lsh_band_pairs(mh: DataFrame, *, n_hashes: int,
-                    band_rows: int) -> DataFrame:
-    """(doc_a, doc_b) pairs of a ``(doc_id, sig array<long>)`` frame that
-    share a full band — the plan :func:`minhash_lsh_pairs` describes."""
-    n_bands = n_hashes // band_rows
-    bands = (mh.select("doc_id", "sig", F.explode(F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.slice("sig", b * band_rows + 1, band_rows).alias("bsig"))
+def _band_pairs(df: DataFrame, key: str, band_key, n_bands: int) -> DataFrame:
+    """Banded-bucket self-join of a ``(doc_id, key)`` frame: (doc_a, doc_b,
+    _ka, _kb) for every doc_a < doc_b pair whose ``band_key(key, b)``
+    agree on some band b in ``range(n_bands)``, each pair ONCE.
+
+    Plan shape: both band sides shuffle on (band, bkey) — the forced
+    sort-merge join makes the two exchange subtrees canonically identical,
+    so the key's producer (a signature kernel, a hash aggregate) runs ONCE
+    and the second side is a ReusedExchange (the planner's broadcast pick
+    evaluated that subtree twice, and a broadcast build side can never be
+    the right call for a self-join whose sides are by construction the
+    same size).  Each pair is emitted exactly once, from its FIRST
+    agreeing band — both full keys ride through the join and a codegen
+    ``array_position`` filter keeps the band row only when every earlier
+    band differs — which replaces an output-sized dropDuplicates
+    exchange+aggregate with a filter.  SMJ on the band key also keeps
+    AQE's skew-join split available for hot buckets (near-identical
+    corpora).  The keys come back as _ka/_kb for a verify step."""
+    bands = (df.select("doc_id", key, F.explode(F.array(*[
+        F.struct(F.lit(b).alias("band"), band_key(F.col(key), b).alias("bkey"))
         for b in range(n_bands)])).alias("_b"))
-        .select("doc_id", "sig", F.col("_b.band").alias("band"),
-                F.col("_b.bsig").alias("bsig")))
+        .select("doc_id", key, F.col("_b.band").alias("band"),
+                F.col("_b.bkey").alias("bkey")))
     a = bands.select(F.col("doc_id").alias("doc_a"),
-                     F.col("sig").alias("_siga"), "band", "bsig").hint("merge")
+                     F.col(key).alias("_ka"), "band", "bkey").hint("merge")
     b = bands.select(F.col("doc_id").alias("doc_b"),
-                     F.col("sig").alias("_sigb"), "band", "bsig")
+                     F.col(key).alias("_kb"), "band", "bkey")
     first_eq = F.array_position(F.array(*[
-        (F.slice("_siga", bb * band_rows + 1, band_rows)
-         == F.slice("_sigb", bb * band_rows + 1, band_rows)).cast("int")
+        (band_key(F.col("_ka"), bb) == band_key(F.col("_kb"), bb)).cast("int")
         for bb in range(n_bands)]), 1)
-    return (a.join(b, ["band", "bsig"])
+    return (a.join(b, ["band", "bkey"])
             .where(F.col("doc_a") < F.col("doc_b"))
             .where(first_eq == F.col("band") + 1)
-            .select("doc_a", "doc_b"))
+            .select("doc_a", "doc_b", "_ka", "_kb"))
 
 
 def minhash_signatures_md5(docs: DataFrame, *, n_hashes: int = 8,
@@ -205,9 +211,10 @@ def minhash_lsh_pairs_md5(docs: DataFrame, *, n_hashes: int = 8,
                           band_rows: int = 2, shingle_n: int = 4) -> DataFrame:
     """md5 twin of ``minhash_lsh_pairs``: the same band join over
     :func:`minhash_signatures_md5` (row-identical to the gate SQL)."""
-    return _lsh_band_pairs(
+    return _band_pairs(
         minhash_signatures_md5(docs, n_hashes=n_hashes, shingle_n=shingle_n),
-        n_hashes=n_hashes, band_rows=band_rows)
+        "sig", lambda sig, b: F.slice(sig, b * band_rows + 1, band_rows),
+        n_hashes // band_rows).select("doc_a", "doc_b")
 
 
 def simhash(docs: DataFrame, *, bits: int = 16, text_col: str = "text") -> DataFrame:
@@ -234,53 +241,21 @@ def simhash_neardup_pairs(docs: DataFrame, *, bits: int = 16,
     """Near-dup pairs by SimHash hamming distance ≤ ``max_hamming`` via
     pigeonhole banding: the hash splits into ``max_hamming+1`` bit bands, and
     any pair within the hamming budget must agree EXACTLY on ≥1 band — so
-    candidates come from a (band, band_bits) bucket equi-join, verified by
-    one exact bit_count.  Never an all-pairs join; at 100 TB the bucket join
-    shuffles one row per (doc, band)."""
-    sh = simhash(docs, bits=bits)
+    candidates come from the :func:`_band_pairs` (band, band_bits) bucket
+    self-join, verified by one exact bit_count.  Never an all-pairs join;
+    at 100 TB the bucket join shuffles one row per (doc, band)."""
     nb = int(max_hamming) + 1
     w = -(-bits // nb)
-    band_structs = []
-    for b in range(nb):
-        lo = b * w
-        width = min(w, bits - lo)
-        if width <= 0:
-            break
-        band_structs.append(F.struct(
-            F.lit(b).alias("band"),
-            F.expr(f"shiftright(simhash, {lo}) & {(1 << width) - 1}")
-             .alias("bits")))
-    bd = (sh.select("doc_id", "simhash",
-                    F.explode(F.array(*band_structs)).alias("_b"))
-          .select("doc_id", "simhash", F.col("_b.band").alias("band"),
-                  F.col("_b.bits").alias("bits")))
-    # Same plan shape as minhash_lsh_pairs: forced sort-merge self-join so
-    # the simhash subtree computes once (exchange reuse), and each pair is
-    # kept only in its FIRST colliding bit-band (both full hashes ride the
-    # join) — replaces the output-sized dropDuplicates exchange with a
-    # codegen filter.
-    a = bd.select(F.col("doc_id").alias("doc_a"),
-                  F.col("simhash").alias("ha"), "band", "bits").hint("merge")
-    b2 = bd.select(F.col("doc_id").alias("doc_b"),
-                   F.col("simhash").alias("hb"), "band", "bits")
-    eqs = []
-    for b in range(nb):
-        lo = b * w
-        width = min(w, bits - lo)
-        if width <= 0:
-            break
-        mask = (1 << width) - 1
-        eqs.append(((F.expr(f"shiftright(ha, {lo}) & {mask}")
-                     == F.expr(f"shiftright(hb, {lo}) & {mask}"))
-                    ).cast("int"))
-    first_eq = F.array_position(F.array(*eqs), 1)
-    cand = (a.join(b2, ["band", "bits"])
-            .where(F.col("doc_a") < F.col("doc_b"))
-            .where(first_eq == F.col("band") + 1)
-            .select("doc_a", "doc_b", "ha", "hb"))
+
+    def band_bits(h, b):
+        width = min(w, bits - b * w)
+        return F.shiftright(h, b * w).bitwiseAND(F.lit((1 << width) - 1))
+
+    cand = _band_pairs(simhash(docs, bits=bits), "simhash", band_bits,
+                       min(nb, -(-bits // w)))
     return (cand
             .withColumn("hamming",
-                        F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
+                        F.bit_count(F.col("_ka").bitwiseXOR(F.col("_kb"))))
             .where(F.col("hamming") <= max_hamming)
             .select("doc_a", "doc_b", "hamming"))
 

@@ -15,6 +15,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _band_pairs
+
 
 def _collect_matrix(df: DataFrame, id_col: str, vec_col: str):
     rows = df.select(id_col, vec_col).collect()
@@ -232,14 +234,16 @@ def ann_lsh_candidates(df: DataFrame, *, n_planes: int = 12, n_bands: int = 4,
                        dim: int | None = None) -> DataFrame:
     """Approximate-NN candidate pairs via OR-amplified sign-random-projection
     LSH: ``n_bands`` independent ``n_planes``-bit signatures; vectors sharing
-    ANY band's full signature become a candidate pair (bucket equi-join per
-    band, unioned by construction — never all-pairs).  OR-amplification is
-    what keeps recall high for moderately-similar vectors; a single band
-    falls off a cliff (round-1 finding).  Hyperplanes are seeded and
-    deterministic.
+    ANY band's full signature become a candidate pair (the
+    ``dedup._band_pairs`` bucket self-join — never all-pairs).
+    OR-amplification is what keeps recall high for moderately-similar
+    vectors; a single band falls off a cliff (round-1 finding).
+    Hyperplanes are seeded and deterministic.
 
-    Returns distinct (id_a, id_b) with id_a < id_b — verify with
-    ``cosine_rerank`` / ``ann_topk``.
+    The kernel emits one (doc_id, sig array<long>) row per vector, one long
+    per band.  Returns distinct (id_a, id_b) with id_a < id_b — each pair
+    once, from its first shared band — verify with ``cosine_rerank`` /
+    ``ann_topk``.
     """
     if dim is None:
         head = df.select(vec_col).head()
@@ -258,25 +262,17 @@ def ann_lsh_candidates(df: DataFrame, *, n_planes: int = 12, n_bands: int = 4,
                 continue
             ids = pdf[id_col].to_numpy().astype(np.int64)
             M = np.array(list(pdf[vec_col]), dtype=np.float64)
-            out_v, out_b, out_s = [], [], []
+            sig = np.zeros((len(ids), nb), dtype=np.int64)
             for b in range(nb):
                 bits = (M @ pl[b].T) > 0.0
-                sig = np.zeros(len(ids), dtype=np.int64)
                 for p in range(npl):
-                    sig |= bits[:, p].astype(np.int64) << p
-                out_v.append(ids)
-                out_b.append(np.full(len(ids), b, dtype=np.int64))
-                out_s.append(sig)
-            yield pd.DataFrame({"vid": np.concatenate(out_v),
-                                "band": np.concatenate(out_b),
-                                "bucket": np.concatenate(out_s)})
+                    sig[:, b] |= bits[:, p].astype(np.int64) << p
+            yield pd.DataFrame({"doc_id": ids, "sig": list(sig)})
 
-    sigs = df.mapInPandas(signatures, "vid long, band long, bucket long")
-    a = sigs.select(F.col("vid").alias("id_a"), "band", "bucket")
-    b = sigs.select(F.col("vid").alias("id_b"), "band", "bucket")
-    return (a.join(b, ["band", "bucket"])
-             .where(F.col("id_a") < F.col("id_b"))
-             .select("id_a", "id_b").dropDuplicates())
+    sigs = df.mapInPandas(signatures, "doc_id long, sig array<long>")
+    return (_band_pairs(sigs, "sig", lambda sig, b: F.element_at(sig, b + 1),
+                        n_bands)
+            .select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")))
 
 
 def cosine_rerank(pairs: DataFrame, emb: DataFrame, *,

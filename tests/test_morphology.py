@@ -154,6 +154,21 @@ def test_place_to_movement_global_fallback(spark, mv):
     assert {(r.poly_id, r.movement_id) for r in e.collect()} == {(9, 1)}
 
 
+def test_place_to_movement_leaves_no_cached_plan(spark, mv, buildings):
+    """Once its result is collected, place_to_movement_graph leaves no
+    cached plan behind (the session is shared, so other tests' cached
+    fixtures are counted out)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def cached_plans():
+        return 0 if cm.isEmpty() else cm.cachedData().size()
+
+    before = cached_plans()
+    place_to_movement_graph(buildings, mv, tolerance=1e-6,
+                            max_connection_distance=50.0).collect()
+    assert cached_plans() == before
+
+
 def test_place_to_movement_touching(spark, mv):
     # square touching the street (edge at y=0) matches via dwithin
     sq = spark.createDataFrame(_square(7, 100.0, 5.0),
@@ -186,9 +201,11 @@ def test_morphological_graph_dag(mv, buildings):
     assert {r.movement_id for r in
             out["movements"].select("movement_id").dropDuplicates().collect()} == {0}
     faced_rows = out["faced_to"].collect()
-    assert {(r.poly_id, r.movement_id) for r in faced_rows} == {(0, 0), (1, 0)}
-    # D4 (round 4): every layer's edges carry WKT geometry
-    assert all(r.geometry.startswith("LINESTRING (") for r in faced_rows)
+    # D4 (round 4): every layer's edges carry WKT geometry — place
+    # centroid → length-weighted centroid of H
+    assert {(r.poly_id, r.movement_id, r.geometry) for r in faced_rows} == {
+        (0, 0, "LINESTRING (100.0 10.0, 200.0 0.0)"),
+        (1, 0, "LINESTRING (390.0 10.0, 200.0 0.0)")}
     assert "geometry" in out["touched_to"].columns
     assert "geometry" in out["connected_to"].columns
     assert out["touched_to"].count() == 0
